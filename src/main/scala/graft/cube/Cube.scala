@@ -217,13 +217,6 @@ object CubeOps {
   private def filter_positions(arr: Column, p: Column => Column): Column =
     filter(arr, (_: Column, i0: Column) => p(i0 + lit(1)))
 
-  /** Index subset along ONE named implicit dim of a multi-implicit-dim
-    * cube (row-major stride arithmetic, in-cell, executor-local).
-    * Kept as the 2-dim name for API stability; delegates to the n-D
-    * path, which handles any rank. */
-  def subsetImplicit2(cube: Cube, dim: String, filterStr: String): Cube =
-    subsetImplicitN(cube, dim, filterStr)
-
   // -------------------------------------------------------------------
   // n-implicit-dim cubes: flattened row-major arrays with shape
   // metadata — the reference's n-dimensional in-blob layout
@@ -746,32 +739,10 @@ object CubeOps {
     bump(cube.copy(df = df), "oph_permute")
   }
 
-  /** General permutation of a flattened 2-implicit-dim array stored
-    * row-major with shape (n1, n2): transpose to (n2, n1). Pure index
-    * arithmetic inside `transform` — executor-local. */
-  def transpose2(arr: Column, n1: Int, n2: Int): Column =
-    transform(sequence(lit(0L), lit(n1.toLong * n2 - 1)), k =>
-      element_at(arr,
-        (pmod(k, lit(n1.toLong)) * n2 + floor(k / lit(n1)) + 1).cast("int")))
-
   // -------------------------------------------------------------------
   // 2-implicit-dim cubes: flattened row-major arrays with shape
   // metadata — the reference's n-dimensional in-blob layout
   // -------------------------------------------------------------------
-
-  /** oph_reduce2 over a 2-implicit-dim flattened array (shape n1 x n2,
-    * row-major): reduce along the INNER dim (contiguous n2-blocks) or
-    * the OUTER dim (stride-n2 gather). Both are in-cell index
-    * arithmetic — executor-local, no shuffle, no explode. */
-  def reduceAlong2(arr: Column, n1: Int, n2: Int, alongInner: Boolean,
-      op: String): Column =
-    if (alongInner)
-      transform(sequence(lit(0), lit(n1 - 1)),
-        i => reduceExpr(slice(arr, i * n2 + 1, lit(n2)), op))
-    else
-      transform(sequence(lit(0), lit(n2 - 1)), j =>
-        reduceExpr(transform(sequence(lit(0), lit(n1 - 1)),
-          i => element_at(arr, (i * n2 + j + 1).cast("int"))), op))
 
   /** oph_reduce2 at the cube level: reduce along a NAMED implicit dim;
     * the surviving dims keep their specs. Delegates to the n-D path. */

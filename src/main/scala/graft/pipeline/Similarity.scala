@@ -212,9 +212,10 @@ object Similarity {
     // identities and the intra subtree is empty, so both are SKIPPED
     // (~9 fewer Exchanges on duplicate-free corpora); results are
     // bit-identical either way, the counts only pick the plan.
-    val Array(nDistinct, nTotal) = clustered
-      .agg(count(lit(1)), sum(size(col("ids"))).cast("long"))
-      .head().toSeq.toArray.map(_.asInstanceOf[Long])
+    val counts = clustered
+      .agg(count(lit(1)), coalesce(sum(size(col("ids"))), lit(0L)))
+      .head()
+    val (nDistinct, nTotal) = (counts.getLong(0), counts.getLong(1))
     // the persisted frame is ONLY (id, band, bandhash) — 3 narrow
     // columns. The signature pass runs once to produce it; the
     // embedding vectors are NOT carried through the explode or the

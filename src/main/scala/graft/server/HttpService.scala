@@ -7,7 +7,7 @@ import java.util.concurrent.Executors
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.core.JobStatus
-import graft.workflow.{Engine, Workflow}
+import graft.workflow.{ArgSpecs, Engine, Workflow}
 
 /**
  * The HTTP/JSON service layer — the Spark-first equivalent of the
@@ -30,7 +30,10 @@ import graft.workflow.{Engine, Workflow}
  *    request|response&level=0-5&status_filter=MASK` — the saved
  *    document store (oph_resume over HTTP): id>0 (or `last`) fetches
  *    one document, id=0/absent returns the session job LISTING as
- *    columns+rows.
+ *    columns+rows. The query string is the operator's argument map,
+ *    answered by the operator's own `SessionService.resumeRequest`: a
+ *    wrong parameter (400) is whatever the `oph_resume` descriptor
+ *    rejects.
  *  - `GET /services/info` — service liveness (oph_service).
  *
  * Authentication (`src/oph_auth.c`, token constants `oph_auth.h:37,121`):
@@ -676,29 +679,6 @@ final class HttpService(
   private def handleResume(ex: HttpExchange, user: String): Unit = {
     val q = query(ex)
     val code = q.getOrElse("session", engine.catalog.sessionCode)
-    // non-numeric values are wrong parameters, like the operator —
-    // never silent defaults (id also accepts the last/all tokens)
-    val idRaw = q.getOrElse("id", "0")
-    if (q.contains("level") && q("level").toIntOption.isEmpty)
-      return reply(ex, 400, s"""{"error":$ErrWrongParameter,""" +
-        """"message":"wrong parameter 'level'"}""")
-    if (idRaw.toIntOption.isEmpty && !idRaw.equalsIgnoreCase("last") &&
-        !idRaw.equalsIgnoreCase("all"))
-      return reply(ex, 400, s"""{"error":$ErrWrongParameter,""" +
-        """"message":"wrong parameter 'id'"}""")
-    val id = idRaw.toIntOption.getOrElse(0)
-    // invalid enum values are wrong parameters exactly like the
-    // oph_resume operator — silently coercing id_type=garbage to
-    // workflow would make the two surfaces disagree on validity
-    if (!q.getOrElse("id_type", "workflow")
-        .matches("(?i)workflow|marker"))
-      return reply(ex, 400, s"""{"error":$ErrWrongParameter,""" +
-        """"message":"wrong parameter 'id_type'"}""")
-    if (!q.getOrElse("document_type", "response")
-        .matches("(?i)request|response"))
-      return reply(ex, 400, s"""{"error":$ErrWrongParameter,""" +
-        """"message":"wrong parameter 'document_type'"}""")
-    val docType = q.getOrElse("document_type", "response")
     val target =
       try engineFor(code, user, createIfAbsent = false).getOrElse(
         return reply(ex, 404,
@@ -709,61 +689,19 @@ final class HttpService(
         case RoutingError(status, msg) => return reply(ex, status,
           s"""{"error":$ErrAuth,"message":${quote(msg)}}""")
       }
-    var idType = q.getOrElse("id_type", "workflow")
-    var level = q.get("level").flatMap(_.toIntOption).getOrElse(1)
-    var docSel = docType
-    val mask = q.getOrElse("status_filter", "11111111")
-    // same validity range as the oph_resume operator — the two
-    // surfaces must agree on what a wrong parameter is
-    if (level < 0 || level > 5)
-      return reply(ex, 400, s"""{"error":$ErrWrongParameter,""" +
-        """"message":"wrong parameter 'level'"}""")
-    // the same level normalization the oph_resume operator applies
-    // (`oph_execute_main.c:2293-2320`): level 4/5 recycle the marker
-    // listing with id demoted to a workflow filter; an explicit
-    // marker id_type there is a wrong parameter. id=last keeps its
-    // single-document meaning through the recycle, like the operator.
-    val wantLast = q.get("id").exists(_.equalsIgnoreCase("last"))
-    var wid = 0
-    var wantListing = id == 0 && !wantLast
-    if (level > 3) {
-      if (q.get("id_type").exists(_.equalsIgnoreCase("marker")))
-        return reply(ex, 400, s"""{"error":$ErrWrongParameter,""" +
-          """"message":"level > 3 cannot combine with a marker filter"}""")
-      if (level > 4) docSel = "both"
-      else if (docSel == "response") docSel = "request"
-      idType = "marker"
-      wid = id
-      level = 3
-      wantListing = !wantLast
-    }
-    try {
-      if (wantListing) {
-        // the reference's id=0 LISTING surface: session job rows as a
-        // grid (columns + string rows), mask/level/id_type applied
-        val (cols, rows) = target.sessions.resumeList(
-          code, user, idType, docSel, level, mask, wid,
-          q.get("user").filter(_.nonEmpty))
-        val colsJson = cols.map(quote).mkString("[", ",", "]")
-        val rowsJson = rows.map(_.map(quote).mkString("[", ",", "]"))
-          .mkString("[", ",", "]")
-        reply(ex, 200,
-          s"""{"error":$Ok,"columns":$colsJson,"rows":$rowsJson}""")
-      } else {
-        // single-document fetches follow the operator's docType
-        // demotion (level 4 -> request; level 5 keeps response)
-        val fetchDoc = if (docSel == "both") "response" else docSel
-        val doc =
-          if (idType == "marker") {
-            val m = if (id > 0) id else target.sessions.lastMarker(code)
-            target.sessions.resumeMarker(code, user, m, fetchDoc)
-          } else target.sessions.resume(code, user, id, fetchDoc)
+    def arr(xs: Seq[String]) = xs.mkString("[", ",", "]")
+    try target.sessions.resumeRequest(code, user, q) match {
+      case SessionService.ResumedDocument(doc) =>
         reply(ex, 200, s"""{"error":$Ok,"document":${quote(doc)}}""")
-      }
+      case SessionService.ResumedListing(cols, rows) =>
+        reply(ex, 200, s"""{"error":$Ok,"columns":${arr(cols.map(quote))},""" +
+          s""""rows":${arr(rows.map(r => arr(r.map(quote))))}}""")
     } catch {
       case e: SessionService.AuthError =>
         reply(ex, 403, s"""{"error":$ErrAuth,"message":${quote(e.getMessage)}}""")
-      case e: IllegalArgumentException =>
+      // ArgSpecs.ArgError (the oph_resume descriptor) or an out-of-range
+      // marker: both are wrong parameters
+      case e @ (_: ArgSpecs.ArgError | _: IllegalArgumentException) =>
         reply(ex, 400, s"""{"error":$ErrWrongParameter,"message":${quote(e.getMessage)}}""")
       case _: NoSuchElementException =>
         reply(ex, 404, s"""{"error":$ErrWrongParameter,"message":"no such document"}""")

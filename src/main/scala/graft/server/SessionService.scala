@@ -2,6 +2,8 @@ package graft.server
 
 import scala.collection.mutable
 
+import graft.workflow.ArgSpecs
+
 /**
  * Session management service — oph_manage_session / oph_resume /
  * oph_log_info semantics (`/root/reference/src/oph_management_operators
@@ -116,6 +118,13 @@ object SessionService {
       workflows: mutable.ArrayBuffer[SavedWorkflow] = mutable.ArrayBuffer.empty)
 
   final class AuthError(msg: String) extends Exception(msg)
+
+  /** What an oph_resume request answers: one saved document, or a job
+    * listing as (columns, string rows). */
+  sealed trait Resumed
+  final case class ResumedDocument(document: String) extends Resumed
+  final case class ResumedListing(columns: Seq[String],
+      rows: Seq[Seq[String]]) extends Resumed
 
   /** What a quota gate needs to know about one session inside a
     * persisted state file, WITHOUT instantiating a service: its owner,
@@ -416,6 +425,53 @@ final class SessionService(
        |<tr><th>#</th><th>workflow</th><th>command</th><th>documents</th></tr>
        |$rows
        |</table></body></html>""".stripMargin
+  }
+
+  /** oph_resume (`src/oph_execute_main.c:2167-2320`) — the one
+    * implementation behind the operator and the `/services/resume`
+    * route. `code` is the already-resolved session; `args` are the
+    * operator's arguments, validated by the `oph_resume` descriptor
+    * (a wrong parameter throws [[ArgSpecs.ArgError]]). `id` is an
+    * integer >= 0 or a token (`src/oph_parser.h:160-161`): `last` = the
+    * newest document, `all` or 0 = the listing. `user` in `args` is
+    * the reference's submitter filter for listings
+    * (`oph_execute_main.c:2791`), never an impersonation handle: ACLs
+    * check the acting `user`. */
+  def resumeRequest(code: String, user: String,
+      args: Map[String, String]): Resumed = {
+    ArgSpecs.validate("oph_resume", args, hasDeps = false,
+      checkValues = true)
+    val idArg = args.getOrElse("id", "0")
+    val wantLast = idArg.equalsIgnoreCase("last")
+    val id =
+      if (wantLast || idArg.equalsIgnoreCase("all")) 0
+      else idArg.toIntOption.filter(_ >= 0).getOrElse(throw new
+        ArgSpecs.ArgError(s"oph_resume: wrong parameter id '$idArg'"))
+    val level = args.getOrElse("level", "1").toInt
+    val markerArg = args.get("id_type").contains("marker")
+    // reference normalization (:2293-2320): level 4/5 recycle the
+    // marker listing with `id` demoted to a workflow filter, level 4
+    // listing requests and level 5 both documents
+    val recycle = level > 3
+    if (recycle && markerArg)
+      throw new ArgSpecs.ArgError("oph_resume: wrong parameter 'level' " +
+        "(marker filter cannot combine with level > 3)")
+    val marker = markerArg || recycle
+    val docType =
+      if (level == 4) "request"
+      else args.getOrElse("document_type", "response")
+    def fetch(id: Int): String =
+      if (marker) resumeMarker(code, user, id, docType)
+      else resume(code, user, id, docType)
+    if (wantLast) ResumedDocument(fetch(if (marker) lastMarker(code) else 0))
+    else if (id == 0 || recycle) {
+      val (cols, rows) = resumeList(code, user,
+        if (marker) "marker" else "workflow",
+        if (level == 5) "both" else docType, math.min(level, 3),
+        args.getOrElse("status_filter", "11111111"),
+        wid = if (recycle) id else 0, args.get("user").filter(_.nonEmpty))
+      ResumedListing(cols, rows)
+    } else ResumedDocument(fetch(id))
   }
 
   /** oph_resume: retrieve a saved request or response

@@ -241,13 +241,16 @@ object StreamAB {
       val qn = s"ab_slog_$seq"
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = spark.conf.getOption(provKey)
+      val changelogKey = "spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled"
       if (rocksdb) {
         spark.conf.set(provKey, "org.apache.spark.sql.execution." +
           "streaming.state.RocksDBStateStoreProvider")
-        spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-      } else prevProv.foreach(_ => spark.conf.unset(provKey))
+        spark.conf.set(changelogKey, "true")
+      } else {
+        spark.conf.unset(provKey)
+        spark.conf.unset(changelogKey)
+      }
       import org.apache.spark.sql.types._
       val tsType = spark.read.parquet(s"$dir/events.parquet")
         .schema("ts").dataType

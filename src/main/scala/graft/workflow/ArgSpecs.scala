@@ -166,7 +166,8 @@ object ArgSpecs {
       "OPH_CWD", "OPH_CDD", "OPH_BASE_SRC_PATH").d("all")),
     // `etc/xml/OPH_RESUME_operator_1.0.xml`
     // `id` is an integer OR the token values "last"/"all"
-    // (`src/oph_parser.h:160-161`) — the operator parses it itself
+    // (`src/oph_parser.h:160-161`) — `SessionService.resumeRequest`
+    // parses it itself
     "oph_resume" -> Seq(a("session").d("this"), a("id").d("0"),
       enum("id_type", "workflow", "marker").d("workflow"),
       enum("document_type", "request", "response").d("response"),

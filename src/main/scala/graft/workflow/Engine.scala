@@ -305,8 +305,11 @@ final class Engine(
 
   /** Refuse past the cap — callers (HTTP execute) pre-check so an
     * over-quota submission answers 429 before any work is admitted. */
-  def checkAdmission(): Unit =
-    if (queueSize > 0 && activeRuns.get >= farmSize + queueSize)
+  def checkAdmission(): Unit = refuseIfFull(activeRuns.get)
+
+  /** The QUEUE_SIZE cap: `running` active runs leave no slot. */
+  private def refuseIfFull(running: Int): Unit =
+    if (queueSize > 0 && running >= farmSize + queueSize)
       throw new Engine.QueueFullError(
         s"queue full: $farmSize running + $queueSize queued (QUEUE_SIZE)")
 
@@ -319,9 +322,7 @@ final class Engine(
   private def admitRun(): Unit = {
     while (true) {
       val cur = activeRuns.get
-      if (queueSize > 0 && cur >= farmSize + queueSize)
-        throw new Engine.QueueFullError(
-          s"queue full: $farmSize running + $queueSize queued (QUEUE_SIZE)")
+      refuseIfFull(cur)
       if (activeRuns.compareAndSet(cur, cur + 1)) return
     }
   }
@@ -559,13 +560,7 @@ final class Engine(
     scala.collection.concurrent.TrieMap[String, String]()
 
   private def persistRuns(): Unit = runStateFile.foreach { p =>
-    def q(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case '\n' => "\\n"; case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    def q(s: String): String = graft.render.ResponseWriter.jsonQuote(s)
     val runs = lastRuns.toSeq.flatMap { case (name, (_, results)) =>
       lastRunJson.get(name).map { js =>
         val rs = results.map { case (k, r) =>
@@ -2882,95 +2877,25 @@ final class Engine(
         }
 
       case "oph_resume" =>
-        // full reference surface (`src/oph_execute_main.c:2167-2320`):
-        // session ('this' = working session), id (0 = listing),
-        // id_type=workflow|marker, document_type=request|response,
-        // level 0-5, status_filter (8-char class mask).
+        // 'this' = the working session; ACLs check the engine's own
+        // principal (the `user` argument only filters listings)
         val code = args.getOrElse("session", "this") match {
           case "" | "this" => catalog.sessionCode
           case other => other
         }
-        // `user` is the reference's SUBMITTER FILTER for listings
-        // (`MYSQL_RETRIEVE_WORKFLOWS_OF_USER_SESSION`,
-        // oph_execute_main.c:2791), never an impersonation handle —
-        // ACL checks always use the engine's own principal
-        val submitterFilter = args.get("user").filter(_.nonEmpty)
-        // id accepts the reference's token values too ("last" = the
-        // most recent document, "all" = the id-0 listing,
-        // `src/oph_parser.h:160-161`)
-        val idArg = args.getOrElse("id", "0")
-        val wantLast = idArg.equalsIgnoreCase("last")
-        var id =
-          if (wantLast || idArg.equalsIgnoreCase("all")) 0
-          else try idArg.toInt catch {
-            case _: NumberFormatException => throw new Engine.EngineError(
-              s"oph_resume: wrong parameter id '$idArg'")
-          }
-        if (id < 0)
-          throw new Engine.EngineError("oph_resume: wrong parameter 'id'")
-        val idTypeArg = args.get("id_type").map(_.toLowerCase)
-        var idType = idTypeArg.getOrElse("workflow") match {
-          case "workflow" => "workflow"
-          case "marker" => "marker"
-          case other => throw new Engine.EngineError(
-            s"oph_resume: wrong parameter id_type '$other'")
-        }
-        var docType =
-          args.getOrElse("document_type", "response").toLowerCase match {
-            case "request" => "request"
-            case "response" => "response"
-            case other => throw new Engine.EngineError(
-              s"oph_resume: wrong parameter document_type '$other'")
-          }
-        var level = args.getOrElse("level", "1").toInt
-        if (level < 0 || level > 5)
-          throw new Engine.EngineError("oph_resume: wrong parameter 'level'")
-        val mask = args.getOrElse("status_filter", "11111111")
-        // reference normalization (:2293-2320): level 0 == 1 for
-        // requests; level 5 selects BOTH documents; level 4/5 recycle
-        // the marker-listing code with `id` demoted to a workflow
-        // filter — an explicit marker id_type there is an error
-        if (level == 0 && docType == "request") level = 1
-        val both = level > 4
-        var wid = 0
-        if (level > 3) {
-          if (idTypeArg.contains("marker"))
-            throw new Engine.EngineError(
-              "oph_resume: wrong parameter 'level' (marker filter " +
-                "cannot combine with level > 3)")
-          idType = "marker"
-          wid = id
-          id = 0
-          level = 3
-          if (!both && docType == "response") docType = "request"
-        }
-        val docSel = if (both) "both" else docType
-        if (wantLast) {
-          // id=last: the session's most recent document of the
-          // requested type (marker = highest marker, workflow = latest)
-          val doc =
-            if (idType == "marker")
-              sessions.resumeMarker(code, user,
-                sessions.lastMarker(code), docType)
-            else sessions.resume(code, user, 0, docType)
-          TaskResult(JobStatus.Completed, message = doc)
-        } else if (id == 0) {
-          val (cols, rows) =
-            sessions.resumeList(code, user, idType, docSel, level,
-              mask, wid, submitterFilter)
-          import org.apache.spark.sql.types.{StructType, StructField, StringType}
-          val schema = StructType(cols.map(StructField(_, StringType)))
-          val df = spark.createDataFrame(
-            java.util.Arrays.asList(rows.map(r =>
-              org.apache.spark.sql.Row(r: _*)): _*), schema)
-          TaskResult(JobStatus.Completed, df = Some(df),
-            message = s"${rows.size} job(s)")
-        } else {
-          val doc =
-            if (idType == "marker")
-              sessions.resumeMarker(code, user, id, docType)
-            else sessions.resume(code, user, id, docType)
-          TaskResult(JobStatus.Completed, message = doc)
+        try sessions.resumeRequest(code, user, args) match {
+          case graft.server.SessionService.ResumedDocument(doc) =>
+            TaskResult(JobStatus.Completed, message = doc)
+          case graft.server.SessionService.ResumedListing(cols, rows) =>
+            import org.apache.spark.sql.types.{StructType, StructField, StringType}
+            val schema = StructType(cols.map(StructField(_, StringType)))
+            val df = spark.createDataFrame(
+              java.util.Arrays.asList(rows.map(r =>
+                org.apache.spark.sql.Row(r: _*)): _*), schema)
+            TaskResult(JobStatus.Completed, df = Some(df),
+              message = s"${rows.size} job(s)")
+        } catch {
+          case e: ArgSpecs.ArgError => throw new Engine.EngineError(e.getMessage)
         }
 
       case "oph_sql" =>

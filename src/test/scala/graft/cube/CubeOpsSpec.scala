@@ -166,14 +166,6 @@ class CubeOpsSpec extends SparkSpec {
     assert(dim == Seq(4, 3, 2, 1))
   }
 
-  test("transpose2 remaps a row-major flattened array") {
-    val df = Seq(Tuple1(Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))).toDF("a")
-    // shape (2,3) row-major -> transpose -> (3,2): [1,4,2,5,3,6]
-    val out = df.select(CubeOps.transpose2($"a", 2, 3).as("t"))
-      .as[Seq[Double]].head()
-    assert(out == Seq(1.0, 4.0, 2.0, 5.0, 3.0, 6.0))
-  }
-
   test("split/merge re-fragment and record the partition count") {
     val c = toyCube()
     assert(CubeOps.split(c, 4).df.rdd.getNumPartitions == 4)

@@ -88,6 +88,12 @@ class SimilaritySpec extends SparkSpec {
       (1L, 4L), (2L, 4L), (3L, 4L)), s"got $pairs")
   }
 
+  test("embeddingDups on an empty frame returns no pairs") {
+    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    assert(Similarity.embeddingDups(emb, "vec_id", "embedding",
+      tau = 0.999, nBits = 8, bands = 4, dim = 4).count() == 0)
+  }
+
   test("ivf top-k prunes to probed cells and finds dominant neighbors") {
     // two tight clusters far apart: IVF must keep same-cluster
     // neighbors ahead of cross-cluster ones

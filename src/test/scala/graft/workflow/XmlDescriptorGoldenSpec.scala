@@ -81,7 +81,11 @@ class XmlDescriptorGoldenSpec extends AnyFunSuite {
   private def dev(op: String, arg: String, field: String): Boolean =
     deviations.contains((op, arg, field))
 
-  private val files = {
+  /** Without the reference checkout the suite still constructs: the
+    * presence test below then fails, naming the missing directory. */
+  private val present = java.nio.file.Files.isDirectory(xmlDir)
+
+  private val files = if (!present) Nil else {
     val s = java.nio.file.Files.list(xmlDir)
     try {
       val l = s.filter(_.getFileName.toString.endsWith(".xml"))
@@ -93,10 +97,11 @@ class XmlDescriptorGoldenSpec extends AnyFunSuite {
   }
 
   test("all 17 reference descriptors are present") {
+    if (!present) fail(s"reference descriptor directory $xmlDir is missing")
     assert(files.size == 17, files.map(_.getFileName).mkString(", "))
   }
 
-  test("OPH_MASSIVE argument names match MassiveFilter.knownKeys") {
+  if (present) test("OPH_MASSIVE argument names match MassiveFilter.knownKeys") {
     val (op, args) = parse(xmlDir.resolve("OPH_MASSIVE_operator_1.0.xml"))
     assert(op == "oph_massive")
     val xmlKeys = args.map(_.name).filterNot(systemArgs).toSet
