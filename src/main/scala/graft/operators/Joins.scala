@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,9 +37,8 @@ object Joins {
    *
    * SKEW NOTE: the window partitions by key, so ONE pathologically
    * hot key serializes into one task — the same failure mode
-   * Skew.scala documents for joins/aggs. When one key dominates,
-   * use [[asofBucketed]]: identical semantics, heavy window split
-   * by (key, time bucket).
+   * Skew.scala documents for joins/aggs. This form has no hot-key
+   * escape; it stays as the parity oracle for [[asofNative]].
    *
    * @param payload right-side columns to carry (must not collide with
    *                left column names; `rightTime` is exposed as
@@ -145,100 +144,6 @@ object Joins {
       .withColumnRenamed("__rt", matchedTime)
       .select((keys ++ leftCols.filterNot(keys.contains) ++
         (matchedTime +: payload)).map(col): _*)
-  }
-
-  /**
-   * Hot-key escape for [[asof]]. The plain formulation runs ONE
-   * window pass per key group, so a single pathologically hot key
-   * (one symbol carrying most of the stream) serializes into one
-   * task at scale. This variant buckets time into `bucketWidth`-wide
-   * ranges and partitions the heavy window by (key, bucket) — a hot
-   * key's rows spread over its time buckets the same way
-   * [[Skew.saltedJoin]] spreads a hot key over salt buckets.
-   *
-   * Mechanics (cheap bucket-granularity passes + the bucketed fill):
-   *  1. per (key, bucket) and per payload COLUMN: the last non-null
-   *     value by [[asof]]'s exact order (lexicographic (time, payload)
-   *     tuple) — per-column, not whole-row, because asof's
-   *     `last(ignoreNulls)` fills each column independently and
-   *     last-non-null composes associatively across ordered buckets;
-   *  2. the state ENTERING each left bucket = plain [[asof]] of the
-   *     distinct left buckets against those carries, STRICTLY at
-   *     bucket granularity — this window is over per-bucket rows,
-   *     thousands of times smaller than the raw stream;
-   *  3. union boundary + right + left rows and fill inside each
-   *     (key, bucket) partition; boundary rows sort first via
-   *     null-time, so in-bucket rows always override older state.
-   *
-   * Inclusive/strict and equal-time semantics match [[asof]] exactly
-   * (parity-tested in JoinsSpec). Times must be numeric — cast
-   * timestamps to epoch first. Pick `bucketWidth` so the densest
-   * (key, bucket) cell fits one task; the cost is two extra small
-   * shuffles, which is why [[asof]] stays the default.
-   */
-  def asofBucketed(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String, payload: Seq[String],
-      bucketWidth: Long, strict: Boolean = false): DataFrame = {
-    require(bucketWidth > 0, "bucketWidth must be positive")
-    val leftCols = left.columns.toSeq
-    val matchedTime = s"matched_$rightTime"
-    val (rightSide, leftSide) = if (strict) (1, 0) else (0, 1)
-    val timeType = left.schema(leftTime).dataType
-    def bucketOf(c: Column): Column =
-      floor(c.cast("double") / bucketWidth).cast("long")
-
-    // 1. per (key, bucket): the WHOLE winning right row — the max
-    // (time, payload) tuple, asof's exact tie-break — carried as one
-    // struct, so a null payload field in the latest row stays null
-    // instead of resurrecting an older row's value
-    val rOrder = struct(col(rightTime) +: payload.map(col): _*)
-    val carry = right
-      .groupBy(keys.map(col) :+ bucketOf(col(rightTime)).as("__b"): _*)
-      .agg(max(rOrder).as("__mrow"))
-      .select((keys.map(col) :+ col("__b") :+
-        col(s"__mrow.$rightTime").as("__rt")) ++
-        payload.map(p => col(s"__mrow.$p").as(p)): _*)
-
-    // 2. state entering each left bucket (strictly earlier buckets) —
-    // an asof over DISTINCT buckets, not raw rows
-    val lb = left.select(
-      keys.map(col) :+ bucketOf(col(leftTime)).as("__b"): _*).distinct()
-    val boundary = asof(lb, carry, keys, "__b", "__b",
-      "__rt" +: payload, strict = true).drop("matched___b")
-
-    // 3. bucketed union fill — the shape of asof, partitioned finer
-    val nullLeft = leftCols.filterNot(keys.contains).map(c =>
-      lit(null).cast(left.schema(c).dataType).as(c))
-    val r = right.select(
-      (keys.map(col) :+ bucketOf(col(rightTime)).as("__b") :+
-        col(rightTime).as("__t") :+ lit(rightSide).as("__side") :+
-        col(rightTime).as(matchedTime)) ++ payload.map(col) ++
-        nullLeft: _*)
-    val b = boundary.select(
-      (keys.map(col) :+ col("__b") :+
-        lit(null).cast(timeType).as("__t") :+ lit(-1).as("__side") :+
-        col("__rt").as(matchedTime)) ++ payload.map(col) ++ nullLeft: _*)
-    val l = left.select(
-      (keys.map(col) :+ bucketOf(col(leftTime)).as("__b") :+
-        col(leftTime).as("__t") :+ lit(leftSide).as("__side") :+
-        lit(null).cast(right.schema(rightTime).dataType).as(matchedTime)) ++
-        payload.map(c => lit(null).cast(right.schema(c).dataType).as(c)) ++
-        leftCols.filterNot(keys.contains).map(col): _*)
-    val u = r.unionByName(l).unionByName(b)
-    val w = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__t").asc_nulls_first +: col("__side").asc +:
-        (matchedTime +: payload).map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // whole-row struct fill, mirroring asof(): right rows AND
-    // boundary rows (the state entering the bucket — always a real
-    // carried tuple, the boundary asof is inner) supply the struct
-    val m = when(col("__side") =!= lit(leftSide),
-      struct((matchedTime +: payload).map(col): _*))
-    val filled = u.withColumn("__m",
-      last(m, ignoreNulls = true).over(w))
-    filled.filter(col("__side") === leftSide && col("__m").isNotNull)
-      .select((keys ++ leftCols.filterNot(keys.contains)).map(col) ++
-        (matchedTime +: payload).map(p => col(s"__m.$p").as(p)): _*)
   }
 
   /**

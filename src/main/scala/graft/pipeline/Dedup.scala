@@ -372,9 +372,11 @@ object Dedup {
    * real cluster point `spark.sparkContext.setCheckpointDir` at
    * durable storage and swap in `checkpoint()`).
    *
-   * @param vertices one `id` column (LongType); isolated vertices
+   * @param vertices one integral `id` column; isolated vertices
    *                 become their own singleton cluster
-   * @param edges    `src`/`dst` columns; direction is ignored
+   * @param edges    integral `src`/`dst` columns; direction is ignored.
+   *                 A non-integral id column is an
+   *                 IllegalArgumentException naming it
    * @return (vertex_id, cluster_id) with cluster_id = min reachable id
    */
   /** Storage for the CC loop's materialized frames: SERIALIZED blocks
@@ -434,7 +436,16 @@ object Dedup {
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxRounds: Int = 25): DataFrame = {
     import org.apache.spark.sql.graftbridge.InternalRowBridge
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+      ShortType, StructField, StructType}
+    // ids must be integral: a cast to long would silently turn string
+    // or fractional ids into nulls (dropped edges) or merged labels
+    for ((df, c) <- Seq((vertices, "id"), (edges, "src"), (edges, "dst")))
+      df.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+        case t => throw new IllegalArgumentException(
+          s"connectedComponents: column '$c' must be integral, not ${t.simpleString}")
+      }
     val spark = vertices.sparkSession
     val debug = sys.env.contains("GRAFT_CC_DEBUG")
     val pairSchema = StructType(Seq(
@@ -457,6 +468,9 @@ object Dedup {
     var level = 0
     while (!converged && level < maxRounds) {
       val t0 = System.nanoTime()
+      // `changed` can only over-count (a retried or speculative task
+      // adds its count again), never under-count: a spurious non-zero
+      // costs one more level, a fixpoint is never declared early
       val acc = spark.sparkContext.longAccumulator(s"cc_changed_$level")
       // symmetrize via ONE explode (both directions of each pair),
       // then range-partition on the first endpoint: equal keys are

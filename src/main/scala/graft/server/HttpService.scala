@@ -603,15 +603,8 @@ final class HttpService(
       // completion push (`callback_url`, `oph_workflow_engine.c:6768`):
       // fires for sync and async alike once the run settles
       spec.callbackUrl.foreach { cb =>
-        f.onComplete { r =>
-          val status = r match {
-            case scala.util.Success(rs)
-              if rs.values.exists(_ == JobStatus.Error) => "error"
-            case scala.util.Success(_) => "completed"
-            case scala.util.Failure(_) => "error"
-          }
-          notifyCallback(cb, jobid, status)
-        }(scala.concurrent.ExecutionContext.global)
+        f.onComplete(r => notifyCallback(cb, jobid, runStatus(r)))(
+          scala.concurrent.ExecutionContext.global)
       }
       if (jobs.size > MaxTrackedJobs)
         // only COMPLETED jobs age out (oldest first) — evicting a
@@ -658,19 +651,23 @@ final class HttpService(
     }
   }
 
+  /** The status word of a settled run, shared by the completion
+    * callback and /services/status: any task Error, or a run that
+    * threw, is "error". */
+  private def runStatus(r: scala.util.Try[Map[String, JobStatus.Value]]): String =
+    r match {
+      case scala.util.Success(rs) if !rs.values.exists(_ == JobStatus.Error) =>
+        "completed"
+      case _ => "error"
+    }
+
   private def handleStatus(ex: HttpExchange): Unit = {
     val jobid = query(ex).get("jobid").flatMap(_.toIntOption)
     jobid.flatMap(jobs.get) match {
       case None =>
         reply(ex, 404, s"""{"error":$ErrWrongParameter,"message":"unknown jobid"}""")
       case Some(job) =>
-        val status = job.future.value match {
-          case None => "running"
-          case Some(scala.util.Success(rs))
-            if rs.values.exists(_ == JobStatus.Error) => "error"
-          case Some(scala.util.Success(_)) => "completed"
-          case Some(scala.util.Failure(_)) => "error"
-        }
+        val status = job.future.value.map(runStatus).getOrElse("running")
         reply(ex, 200,
           s"""{"jobid":${job.id},"status":"$status","error":$Ok}""")
     }

@@ -807,11 +807,139 @@ final class Engine(
     /** Execute tasks[from..until); returns a control signal:
       * 0 = normal, 1 = break (consumed by the nearest enclosing loop),
       * 2 = abort (propagates to the workflow root). `vars` is the
-      * block's variable scope — parallel for-branches get clones. */
+      * block's variable scope — parallel for-branches get clones.
+      *
+      * Every task instance takes one outcome path, as in the
+      * reference's `oph_workflow_notify`: the task's own work
+      * (substitution, loop set-up, condition, variable tasks,
+      * dependency routing, the operator) runs in one `try`, and any
+      * failure records an Error and follows the task's `on_error`. */
     def runBlock(from: Int, until: Int, iterSuffix: String,
         vars: scala.collection.mutable.Map[String, Workflow.Var]): Int = {
       def sub(s: String): String =
         Workflow.substitute(s, vars.toMap, builtins)
+      // marks this block's tasks[k..until) that have no result yet
+      def drain(k: Int, status: JobStatus.Value): Unit =
+        (k until until).foreach(j => results.putIfAbsent(
+          s"${spec.tasks(j).name}$iterSuffix", TaskResult(status)))
+
+      // dependency output harvesting, preferring THIS iteration's
+      // instance — parallel for branches must not read a sibling
+      // branch's cube
+      def depPid(d: Workflow.Dependency): Option[String] = {
+        // the declared dependency surface must not be silently
+        // ignored: unsupported output_argument values error
+        // instead of pretending to work
+        if (d.outputArgument != "cube")
+          throw new Engine.EngineError(s"dependency on '${d.task}': " +
+            s"unsupported output_argument '${d.outputArgument}'")
+        // a fan-out producer records its minted pids in
+        // TaskResult.outputs: output_order indexes that list
+        // (0 = first). Single-output producers use the
+        // recorded pid — message text is NEVER parsed (listing
+        // operators also join '/'-bearing strings with '|').
+        val fanOut0 = results.get(s"${d.task}$iterSuffix")
+          .orElse(results.get(d.task))
+          .map(_.outputs).filter(_.nonEmpty)
+        // dependency `filter` (`oph_workflow_structs.h:90`,
+        // default "all"): a 1-based index filter in the subset
+        // grammar selecting WHICH of a fan-out producer's
+        // outputs flow in; output_order then indexes the
+        // filtered list
+        val fanOut = (d.filter, fanOut0) match {
+          case ("all", f) => f
+          case (flt, Some(arr)) =>
+            val spec =
+              try graft.core.Subset.parse(flt, Some(arr.size.toLong))
+              catch {
+                case e: Exception => throw new Engine.EngineError(
+                  s"dependency on '${d.task}': bad filter '$flt': " +
+                    e.getMessage)
+              }
+            val kept = arr.zipWithIndex.collect {
+              case (p, i) if spec.contains(i + 1L) => p
+            }
+            if (kept.isEmpty)
+              throw new Engine.EngineError(s"dependency on " +
+                s"'${d.task}': filter '$flt' selects no outputs")
+            Some(kept)
+          case (flt, None) =>
+            throw new Engine.EngineError(s"dependency on " +
+              s"'${d.task}': filter '$flt' needs a fan-out producer")
+        }
+        fanOut match {
+          case Some(arr) =>
+            arr.lift(d.outputOrder).orElse(
+              throw new Engine.EngineError(s"dependency on " +
+                s"'${d.task}': no output ${d.outputOrder}"))
+          case None if d.outputOrder > 0 =>
+            throw new Engine.EngineError(s"dependency on " +
+              s"'${d.task}': no output ${d.outputOrder}")
+          case None => outPids.get(s"${d.task}$iterSuffix")
+            .orElse(outPids.get(d.task))
+        }
+      }
+
+      /** Run data task `t` on its substituted arguments. */
+      def execute(t: Workflow.Task, args0: Map[String, String]): TaskResult = {
+        // request-level cdd is each task's default data directory
+        // (`oph_workflow_parsing.c:91-95`): relative src_path /
+        // output_path values resolve against it in the operator
+        val args =
+          if (args0.contains("cdd") || spec.cdd == "/") args0
+          else args0 + ("cdd" -> spec.cdd)
+        // Deps with an explicit `argument` (type all|single) inject
+        // into that slot, ordered by `order` and '|'-joined when
+        // several target the same slot (`oph_workflow_structs.h:83-102`);
+        // embedded deps keep the legacy single-`cube` fallback.
+        val explicitDeps = t.dependencies
+          .filter(_.depType != "embedded") // argument default "cube"
+        lazy val routed = explicitDeps.groupBy(_.argument.getOrElse("cube"))
+          .foldLeft(args) { case (m, (argName, ds)) =>
+            if (m.contains(argName)) m
+            else {
+              val pids = ds.sortBy(_.order).flatMap(depPid)
+              if (pids.isEmpty) m else m + (argName -> pids.mkString("|"))
+            }
+          }
+        // the legacy fallback injects ONLY embedded deps into
+        // 'cube' — a dep explicitly routed to another slot must
+        // not double as the cube input (intercube(B,B) otherwise).
+        // lazy: routing errors (bad output_order, unsupported
+        // filter) are retried with the operator under on_error=repeat
+        lazy val withCube: Map[String, String] =
+          if (routed.contains("cube") || t.dependencies.isEmpty) routed
+          else t.dependencies.reverseIterator
+            .filter(_.depType == "embedded")
+            .flatMap(depPid)
+            .nextOption()
+            .map(p => routed + ("cube" -> p)).getOrElse(routed)
+        // on_error=repeat retries with linear backoff before
+        // giving up (reference auto-retry, engine.c:860-877)
+        val maxAttempts = if (t.onError == "repeat") 3 else 1
+        def attempt(n: Int): TaskResult =
+          try {
+            runPinContext.set(pinForRun)
+            try withTaskPermit(runDataOperator(t.operator, withCube))
+            finally runPinContext.remove()
+          } catch {
+            case e: Exception if n < maxAttempts =>
+              sessions.log(
+                s"${t.name}: attempt $n failed, retrying (${e.getMessage})")
+              Thread.sleep(50L * n)
+              attempt(n + 1)
+          }
+        val r = attempt(1)
+        // massive fan-outs carry every produced pid in `outputs`; pin
+        // them all — any can be a later dep
+        r.outputs.foreach(pinForRun)
+        // on_exit: collect this task's output for the workflow-end
+        // exit action (`oph_workflow_define.h:77-79`)
+        if (t.onExit == "oph_delete" || t.onExit == "oph_deletecontainer")
+          r.cubePid.foreach(p => exitActions += ((t.onExit, p)))
+        r
+      }
+
       var i = from
       while (i < until) {
         // a pending oph_cancel lands BETWEEN tasks (any running Spark
@@ -821,484 +949,251 @@ final class Engine(
         // (`oph_workflow_engine.c:3657`). Returning 0 lets enclosing
         // blocks drain as no-ops through their own head checks.
         cancelFlags.get(wfId) match {
-          case Some('s') =>
-            (i until until).foreach { k =>
-              val key = s"${spec.tasks(k).name}$iterSuffix"
-              if (!results.contains(key))
-                results(key) = TaskResult(JobStatus.Pending)
-            }
-            return 0
-          case Some(_) =>
-            (i until until).foreach { k =>
-              val key = s"${spec.tasks(k).name}$iterSuffix"
-              if (!results.contains(key))
-                results(key) = TaskResult(JobStatus.Aborted)
-            }
-            return 2
+          case Some('s') => drain(i, JobStatus.Pending); return 0
+          case Some(_) => drain(i, JobStatus.Aborted); return 2
           case None =>
         }
         val t = spec.tasks(i)
-        val op = t.operator.toLowerCase
-        op match {
-          case "oph_for" =>
-            val end = matching(spec, i, "oph_for", "oph_endfor")
-            // a bad loop key or counter string is a task Error that
-            // follows on_error, like every other flow-control failure
-            val setup =
-              try {
-                val args = t.arguments.map { case (k, v) => k -> sub(v) }
-                val key = args.getOrElse("key", "index")
-                // IEEE Std 1003.1 name check, as the reference enforces
-                // on the loop counter (`oph_flow_control_operators.c:
-                // 1705-1717`)
-                if (!key.matches("[A-Za-z_][A-Za-z0-9_]*"))
-                  throw new Engine.EngineError(
-                    s"oph_for: invalid variable name '$key'")
-                val values: Seq[String] =
-                  args.get("values").map(_.split('|').toSeq)
-                    .orElse(args.get("counter").map(c =>
-                      Subset.parse(c).indices.map(_.toString)))
-                    // src_path/input: one iteration per matching FILE
-                    // (`oph_workflow_engine.c:964-1000`, HISTORY #63) —
-                    // the loop variable binds each file path in turn.
-                    // The arg is multi: '|'-separated folders (outside
-                    // brackets) each expand and concatenate
-                    .orElse(args.get("src_path").orElse(args.get("input"))
-                      .map { p =>
-                        // split on '|' OUTSIDE brackets (shared
-                        // MassiveFilter splitter): a mixed list like
-                        // '/a|[path=/b]' expands BOTH parts, each bare
-                        // folder wrapping into its own [path=...].
-                        // Relative folders resolve against the
-                        // request-level cdd, like operator src_path
-                        // values do (`oph_workflow_parsing.c:91-95`)
-                        val cdd = args.get("cdd")
-                          .orElse(Option(spec.cdd).filter(_ != "/"))
-                        def resolve(part: String): String = cdd match {
-                          case Some(base) if !part.startsWith("/") &&
-                              !part.contains("://") =>
-                            (if (base.endsWith("/")) base
-                             else base + "/") + part
-                          case _ => part
+        val name = s"${t.name}$iterSuffix"
+        // where the walk goes on after this task, also when on_error
+        // skips past it: a block opener resumes after its closer
+        var next = i + 1
+        val signal =
+          try t.operator.toLowerCase match {
+            case "oph_for" =>
+              val end = matching(spec, i, "oph_for", "oph_endfor")
+              next = end + 1
+              val args = t.arguments.map { case (k, v) => k -> sub(v) }
+              val key = args.getOrElse("key", "index")
+              // IEEE Std 1003.1 name check, as the reference enforces
+              // on the loop counter (`oph_flow_control_operators.c:
+              // 1705-1717`)
+              if (!key.matches("[A-Za-z_][A-Za-z0-9_]*"))
+                throw new Engine.EngineError(
+                  s"oph_for: invalid variable name '$key'")
+              val values: Seq[String] =
+                args.get("values").map(_.split('|').toSeq)
+                  .orElse(args.get("counter").map(c =>
+                    Subset.parse(c).indices.map(_.toString)))
+                  // src_path/input: one iteration per matching FILE
+                  // (`oph_workflow_engine.c:964-1000`, HISTORY #63) —
+                  // the loop variable binds each file path in turn.
+                  // The arg is multi: '|'-separated folders (outside
+                  // brackets) each expand and concatenate
+                  .orElse(args.get("src_path").orElse(args.get("input"))
+                    .map { p =>
+                      // split on '|' OUTSIDE brackets (shared
+                      // MassiveFilter splitter): a mixed list like
+                      // '/a|[path=/b]' expands BOTH parts, each bare
+                      // folder wrapping into its own [path=...].
+                      // Relative folders resolve against the
+                      // request-level cdd, like operator src_path
+                      // values do (`oph_workflow_parsing.c:91-95`)
+                      val cdd = args.get("cdd")
+                        .orElse(Option(spec.cdd).filter(_ != "/"))
+                      val files = MassiveFilter.splitTop(p, '|')
+                        .flatMap { part =>
+                          val massive =
+                            if (part.startsWith("[")) part
+                            else s"[path=${resolveCdd(cdd, part)}]"
+                          MassiveFilter.expandFiles(massive, cdd = spec.cdd)
                         }
-                        val files = MassiveFilter.splitTop(p, '|')
-                          .flatMap { part =>
-                            val massive =
-                              if (part.startsWith("[")) part
-                              else s"[path=${resolve(part)}]"
-                            MassiveFilter.expandFiles(massive,
-                              cdd = spec.cdd)
-                          }
-                        if (files.isEmpty) throw new Engine.EngineError(
-                          s"oph_for: no files match '$p'")
-                        files
-                      })
-                    .getOrElse(Seq("1"))
-                Right((args, key, values))
-              } catch {
-                case e: Exception => Left(e)
+                      if (files.isEmpty) throw new Engine.EngineError(
+                        s"oph_for: no files match '$p'")
+                      files
+                    })
+                  .getOrElse(Seq("1"))
+              def iteration(idx: Int,
+                  scope: scala.collection.mutable.Map[String, Workflow.Var]): Int = {
+                scope(key) = Workflow.Var(values(idx))
+                scope(s"$key&") = Workflow.Var((idx + 1).toString) // index form
+                runBlock(i + 1, end, s"${iterSuffix}_${idx + 1}", scope)
               }
-            setup match {
-              case Left(e) =>
-                results(s"${t.name}$iterSuffix") =
-                  TaskResult(JobStatus.Error, message = e.getMessage)
-                t.onError match {
-                  case "skip" | "continue" | "nop" | "repeat" => i = end + 1
-                  case "break" => return 1
-                  case _ =>
-                    (i + 1 until until).foreach(k =>
-                      results(s"${spec.tasks(k).name}$iterSuffix") =
-                        TaskResult(JobStatus.Aborted))
-                    return 2
-                }
-              case Right((args, key, values)) =>
-            var broke = false
-            var aborted = false
-            if (args.get("parallel").exists(_.equalsIgnoreCase("yes"))) {
-              // parallel=yes: branches replicated and run concurrently
-              // (`oph_workflow_parallel_fco`, engine.c:1207) — each
-              // iteration gets its own variable scope
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.duration.Duration
-              import scala.concurrent.ExecutionContext.Implicits.global
-              val futs = values.zipWithIndex.map { case (v, idx) =>
-                Future {
-                  // setJobGroup is thread-local: re-tag this pool
-                  // thread so the branch's Spark jobs stay cancellable
-                  // under THIS workflow's id (pool threads otherwise
-                  // carry whatever group they inherited at creation)
-                  spark.sparkContext.setJobGroup(jobGroup, spec.name,
-                    interruptOnCancel = true)
-                  val scope = vars.clone()
-                  scope(key) = Workflow.Var(v)
-                  scope(s"$key&") = Workflow.Var((idx + 1).toString)
-                  try runBlock(i + 1, end, s"${iterSuffix}_${idx + 1}", scope)
-                  finally spark.sparkContext.clearJobGroup()
-                }
-              }
-              // propagate signals once all branches settle: break is
-              // consumed by this loop, abort propagates upward
-              val signals = Await.result(Future.sequence(futs), Duration.Inf)
-              broke = signals.contains(1)
-              aborted = signals.contains(2)
-            } else {
-              var idx = 0
-              while (idx < values.size && !broke && !aborted) {
-                vars(key) = Workflow.Var(values(idx))
-                vars(s"$key&") = Workflow.Var((idx + 1).toString) // index form
-                runBlock(i + 1, end, s"${iterSuffix}_${idx + 1}", vars) match {
-                  case 1 => broke = true
-                  case 2 => aborted = true
-                  case _ =>
-                }
-                idx += 1
-              }
-            }
-            // a break signal is CONSUMED here: it stops this loop's
-            // iterations and execution continues after oph_endfor;
-            // an abort keeps propagating to the workflow root
-            results(s"${t.name}$iterSuffix") = TaskResult(JobStatus.Completed,
-              message = s"loop over ${values.size} values" +
-                (if (broke) " (broken early)" else ""))
-            if (aborted) return 2
-            i = end + 1
-            }
-
-          case "oph_if" | "oph_elseif" =>
-            // find the chain: branch starts and the closing endif
-            val endif = matching(spec, i, "oph_if", "oph_endif")
-            var selected = -1
-            // walk branches at this nesting level; a bad condition
-            // (0/0, '---', unresolved var) is a task Error that follows
-            // on_error like any other flow-control failure
-            var j = i
-            try while (j < endif) {
-              val bt = spec.tasks(j)
-              bt.operator.toLowerCase match {
-                case "oph_if" | "oph_elseif" if selected < 0 =>
-                  val cond = bt.arguments.get("condition").map(sub)
-                    .map(Workflow.evalCondition).getOrElse(1.0)
-                  if (cond != 0) selected = j
-                case "oph_else" if selected < 0 => selected = j
-                case _ =>
-              }
-              j = nextBranch(spec, j, endif)
-            } catch {
-              case e @ (_: Engine.EngineError | _: Workflow.ValidationError) =>
-                results(s"${t.name}$iterSuffix") =
-                  TaskResult(JobStatus.Error, message = e.getMessage)
-                t.onError match {
-                  case "skip" | "continue" | "nop" | "repeat" =>
-                    i = endif + 1
-                  case "break" => return 1
-                  case _ =>
-                    (i + 1 until until).foreach(k =>
-                      results(s"${spec.tasks(k).name}$iterSuffix") =
-                        TaskResult(JobStatus.Aborted))
-                    return 2
-                }
-            }
-            if (results.get(s"${t.name}$iterSuffix")
-                .exists(_.status == JobStatus.Error)) {
-              // condition error already handled above; skip the block
-            } else {
-            // execute only the selected branch; its break/abort
-            // signal propagates (break reaches the enclosing loop)
-            var branchEnd = -1
-            var branchSignal = 0
-            if (selected >= 0) {
-              branchEnd = math.min(nextBranch(spec, selected, endif), endif)
-              branchSignal = runBlock(selected + 1, branchEnd, iterSuffix, vars)
-            }
-            // forward=yes: the selected branch's last output cube flows
-            // through the block to dependants of the if/endif tasks
-            // (`oph_flow_control_operators.c:569-583`)
-            if (t.arguments.get("forward").map(sub)
-                .exists(_.equalsIgnoreCase("yes")) && selected >= 0) {
-              val lastPid = (selected + 1 until branchEnd).reverseIterator
-                .flatMap(k => outPids.get(s"${spec.tasks(k).name}$iterSuffix")
-                  .orElse(outPids.get(spec.tasks(k).name))) // nested loops
-                .nextOption()
-              lastPid.foreach { p =>
-                Seq(t.name, spec.tasks(endif).name).foreach { n =>
-                  outPids(s"$n$iterSuffix") = p
-                  outPids(n) = p
-                }
-              }
-            }
-            // mark branch heads
-            results(s"${t.name}$iterSuffix") =
-              TaskResult(JobStatus.Completed, message = "selection evaluated")
-            if (branchSignal != 0) return branchSignal
-            i = endif + 1
-            }
-
-          case "oph_endfor" | "oph_endif" | "oph_else" =>
-            i += 1 // structural markers; bodies handled by their openers
-
-          case "oph_set" | "oph_wait" | "oph_input" =>
-            // flow-control tasks honor on_error like data tasks: a bad
-            // timeout/key records an Error and follows skip/break/abort
-            val sig =
-              try {
-                val args = t.arguments.map { case (k, v) => k -> sub(v) }
-                op match {
-                  case "oph_set" =>
-                    val summary = setVariables(args, vars)
-                    results(s"${t.name}$iterSuffix") =
-                      TaskResult(JobStatus.Completed, message = summary)
-                    0
-                  case "oph_wait" =>
-                    val status = runWait(wfId, s"${t.name}$iterSuffix", args, vars)
-                    results(s"${t.name}$iterSuffix") = TaskResult(status,
-                      message = s"wait ${status.toString.toLowerCase}")
-                    if (status == JobStatus.Aborted) 2 else 0
-                  case _ => // oph_input: oph_set with has_action — sets
-                    // variables AND can complete a waiting task
-                    // (`oph_set_impl(..., has_action=1)`)
-                    val names = splitMulti(args.getOrElse("key", ""))
-                    val values = splitMulti(args.getOrElse("value", ""))
-                    val action = args.getOrElse("action", "continue")
-                    if (!Set("continue", "abort", "wait").contains(action))
-                      throw new Engine.EngineError(
-                        s"oph_input: wrong action '$action'")
-                    // workflow identifier: positive ids scope the
-                    // delivery to that workflow's waits; <= 0 rejected
-                    // like the reference (`oph_server_test.c` case 7)
-                    val targetWf = args.get("id").map { id =>
-                      id.toIntOption.filter(_ > 0).getOrElse(
-                        throw new Engine.EngineError(
-                          s"oph_input: wrong workflow identifier '$id'"))
+              val signals =
+                if (args.get("parallel").exists(_.equalsIgnoreCase("yes"))) {
+                  // parallel=yes: branches replicated and run
+                  // concurrently (`oph_workflow_parallel_fco`,
+                  // engine.c:1207) — each iteration gets its own
+                  // variable scope
+                  import scala.concurrent.{Await, Future}
+                  import scala.concurrent.duration.Duration
+                  import scala.concurrent.ExecutionContext.Implicits.global
+                  val futs = values.indices.map { idx =>
+                    Future {
+                      // setJobGroup is thread-local: re-tag this pool
+                      // thread so the branch's Spark jobs stay
+                      // cancellable under THIS workflow's id (pool
+                      // threads otherwise carry whatever group they
+                      // inherited at creation)
+                      spark.sparkContext.setJobGroup(jobGroup, spec.name,
+                        interruptOnCancel = true)
+                      try iteration(idx, vars.clone())
+                      finally spark.sparkContext.clearJobGroup()
                     }
-                    val delivered = deliverInput(args.get("taskname"),
-                      Engine.InputMessage(names, values, action), targetWf)
-                    // an explicit taskname must name SOME oph_wait task
-                    // (live here or declared in this workflow) — the
-                    // reference's static lookup error otherwise
-                    if (!delivered) args.get("taskname").foreach { tn =>
-                      if (!spec.tasks.exists(w =>
-                          w.operator.equalsIgnoreCase("oph_wait") &&
-                          w.name == tn))
-                        throw new Engine.EngineError(
-                          "oph_input: invalid task name, task not found or ambiguous")
-                    }
-                    // also visible in the current scope (same-workflow)
-                    val summary =
-                      if (names.nonEmpty)
-                        setVariables(args - "action" - "taskname", vars)
-                      else ""
-                    results(s"${t.name}$iterSuffix") =
-                      TaskResult(JobStatus.Completed,
-                        message = (if (delivered) "input delivered"
-                          else "input set") +
-                          (if (summary.nonEmpty) s"; $summary" else ""))
-                    0
-                }
-              } catch {
-                case e: Exception =>
-                  results(s"${t.name}$iterSuffix") =
-                    TaskResult(JobStatus.Error, message = e.getMessage)
-                  t.onError match {
-                    case "skip" | "continue" | "nop" | "repeat" => 0
-                    case "break" => 1
-                    case _ => 2
                   }
-              }
-            sig match {
-              case 1 => return 1
-              case 2 =>
-                (i + 1 until until).foreach(k =>
-                  results(s"${spec.tasks(k).name}$iterSuffix") =
-                    TaskResult(JobStatus.Aborted))
-                return 2
-              case _ => i += 1
-            }
+                  // signals count once all branches settle
+                  Await.result(Future.sequence(futs), Duration.Inf)
+                } else
+                  // serial: the first break or abort ends the loop
+                  values.indices.iterator.map(iteration(_, vars))
+                    .find(_ != 0).toSeq
+              // a break signal is CONSUMED here: it stops this loop's
+              // iterations and execution continues after oph_endfor;
+              // an abort keeps propagating to the workflow root
+              results(name) = TaskResult(JobStatus.Completed,
+                message = s"loop over ${values.size} values" +
+                  (if (signals.contains(1)) " (broken early)" else ""))
+              if (signals.contains(2)) 2 else 0
 
-          case _ =>
-            if (!t.run) {
-              // skipped tasks are still SUBMITTED jobs in the reference
-              // (run=no -> status SKIPPED in the job table), so they
-              // get a marker and stay resume-addressable
-              taskLog(s"${t.name}$iterSuffix") =
-                (mintMarker(), s"${t.operator} " +
-                  t.arguments.map { case (k, v) => s"$k=${sub(v)}" }
-                    .mkString(";"), iterSuffix.nonEmpty)
-              results(s"${t.name}$iterSuffix") = TaskResult(JobStatus.Skipped)
-              i += 1
-            } else if (checkpointSkip.contains(s"${t.name}$iterSuffix")) {
-              // checkpointed: replay the prior result (output cube
-              // verified to still exist) instead of re-executing —
-              // still a SUBMITTED job for the resume store, so it gets
-              // a marker and its substituted command like any other
-              val cached = checkpointSkip(s"${t.name}$iterSuffix")
-              taskLog(s"${t.name}$iterSuffix") =
-                (mintMarker(), s"${t.operator} " +
-                  t.arguments.map { case (k, v) => s"$k=${sub(v)}" }
-                    .mkString(";"), iterSuffix.nonEmpty)
-              results(s"${t.name}$iterSuffix") = cached
-              cached.cubePid.foreach { p =>
-                pinForRun(p)
-                outPids(s"${t.name}$iterSuffix") = p
-                outPids(t.name) = p
+            case "oph_if" | "oph_elseif" =>
+              // find the chain: branch starts and the closing endif
+              val endif = matching(spec, i, "oph_if", "oph_endif")
+              next = endif + 1
+              // walk branches at this nesting level for the first
+              // whose condition holds
+              var selected = -1
+              var j = i
+              while (j < endif) {
+                val bt = spec.tasks(j)
+                bt.operator.toLowerCase match {
+                  case "oph_if" | "oph_elseif" if selected < 0 =>
+                    val cond = bt.arguments.get("condition").map(sub)
+                      .map(Workflow.evalCondition).getOrElse(1.0)
+                    if (cond != 0) selected = j
+                  case "oph_else" if selected < 0 => selected = j
+                  case _ =>
+                }
+                j = nextBranch(spec, j, endif)
               }
-              i += 1
-            } else {
-              val marker = mintMarker()
-              // request-level cdd is each task's default data directory
-              // (`oph_workflow_parsing.c:91-95`): relative src_path /
-              // output_path values resolve against it in the operator
+              // execute only the selected branch; its break/abort
+              // signal propagates (break reaches the enclosing loop)
+              var branchEnd = -1
+              var branchSignal = 0
+              if (selected >= 0) {
+                branchEnd = math.min(nextBranch(spec, selected, endif), endif)
+                branchSignal = runBlock(selected + 1, branchEnd, iterSuffix, vars)
+              }
+              // forward=yes: the selected branch's last output cube flows
+              // through the block to dependants of the if/endif tasks
+              // (`oph_flow_control_operators.c:569-583`)
+              if (t.arguments.get("forward").map(sub)
+                  .exists(_.equalsIgnoreCase("yes")) && selected >= 0) {
+                val lastPid = (selected + 1 until branchEnd).reverseIterator
+                  .flatMap(k => outPids.get(s"${spec.tasks(k).name}$iterSuffix")
+                    .orElse(outPids.get(spec.tasks(k).name))) // nested loops
+                  .nextOption()
+                lastPid.foreach { p =>
+                  Seq(t.name, spec.tasks(endif).name).foreach { n =>
+                    outPids(s"$n$iterSuffix") = p
+                    outPids(n) = p
+                  }
+                }
+              }
+              // mark branch heads
+              results(name) =
+                TaskResult(JobStatus.Completed, message = "selection evaluated")
+              branchSignal
+
+            case "oph_endfor" | "oph_endif" | "oph_else" =>
+              0 // structural markers; bodies handled by their openers
+
+            case op @ ("oph_set" | "oph_wait" | "oph_input") =>
+              val args = t.arguments.map { case (k, v) => k -> sub(v) }
+              op match {
+                case "oph_set" =>
+                  val summary = setVariables(args, vars)
+                  results(name) =
+                    TaskResult(JobStatus.Completed, message = summary)
+                  0
+                case "oph_wait" =>
+                  val status = runWait(wfId, name, args, vars)
+                  results(name) = TaskResult(status,
+                    message = s"wait ${status.toString.toLowerCase}")
+                  if (status != JobStatus.Aborted) 0
+                  else { drain(i + 1, JobStatus.Aborted); 2 }
+                case _ => // oph_input: oph_set with has_action — sets
+                  // variables AND can complete a waiting task
+                  // (`oph_set_impl(..., has_action=1)`)
+                  val names = splitMulti(args.getOrElse("key", ""))
+                  val values = splitMulti(args.getOrElse("value", ""))
+                  val action = args.getOrElse("action", "continue")
+                  if (!Set("continue", "abort", "wait").contains(action))
+                    throw new Engine.EngineError(
+                      s"oph_input: wrong action '$action'")
+                  // workflow identifier: positive ids scope the
+                  // delivery to that workflow's waits; <= 0 rejected
+                  // like the reference (`oph_server_test.c` case 7)
+                  val targetWf = args.get("id").map { id =>
+                    id.toIntOption.filter(_ > 0).getOrElse(
+                      throw new Engine.EngineError(
+                        s"oph_input: wrong workflow identifier '$id'"))
+                  }
+                  val delivered = deliverInput(args.get("taskname"),
+                    Engine.InputMessage(names, values, action), targetWf)
+                  // an explicit taskname must name SOME oph_wait task
+                  // (live here or declared in this workflow) — the
+                  // reference's static lookup error otherwise
+                  if (!delivered) args.get("taskname").foreach { tn =>
+                    if (!spec.tasks.exists(w =>
+                        w.operator.equalsIgnoreCase("oph_wait") &&
+                        w.name == tn))
+                      throw new Engine.EngineError(
+                        "oph_input: invalid task name, task not found or ambiguous")
+                  }
+                  // also visible in the current scope (same-workflow)
+                  val summary =
+                    if (names.nonEmpty)
+                      setVariables(args - "action" - "taskname", vars)
+                    else ""
+                  results(name) =
+                    TaskResult(JobStatus.Completed,
+                      message = (if (delivered) "input delivered"
+                        else "input set") +
+                        (if (summary.nonEmpty) s"; $summary" else ""))
+                  0
+              }
+
+            case _ =>
               val args0 = t.arguments.map { case (k, v) => k -> sub(v) }
-              val args =
-                if (args0.contains("cdd") || spec.cdd == "/") args0
-                else args0 + ("cdd" -> spec.cdd)
               // job record for oph_resume's marker surface: the
               // SUBSTITUTED command, like the reference's saved
-              // submission strings
-              taskLog(s"${t.name}$iterSuffix") = (marker, s"${t.operator} " +
+              // submission strings. Skipped (run=no -> SKIPPED in the
+              // job table) and checkpoint-replayed tasks are still
+              // SUBMITTED jobs in the reference, so they get one too
+              // and stay resume-addressable
+              taskLog(name) = (mintMarker(), s"${t.operator} " +
                 args0.map { case (k, v) => s"$k=$v" }.mkString(";"),
                 iterSuffix.nonEmpty)
-              // dependency output harvesting, preferring THIS
-              // iteration's instance — parallel for branches must not
-              // read a sibling branch's cube. Deps with an explicit
-              // `argument` (type all|single) inject into that slot,
-              // ordered by `order` and '|'-joined when several target
-              // the same slot (`oph_workflow_structs.h:83-102`);
-              // embedded deps keep the legacy single-`cube` fallback.
-              def depPid(d: Workflow.Dependency): Option[String] = {
-                // the declared dependency surface must not be silently
-                // ignored: unsupported output_argument values error
-                // instead of pretending to work
-                if (d.outputArgument != "cube")
-                  throw new Engine.EngineError(s"dependency on '${d.task}': " +
-                    s"unsupported output_argument '${d.outputArgument}'")
-                // a fan-out producer records its minted pids in
-                // TaskResult.outputs: output_order indexes that list
-                // (0 = first). Single-output producers use the
-                // recorded pid — message text is NEVER parsed (listing
-                // operators also join '/'-bearing strings with '|').
-                val fanOut0 = results.get(s"${d.task}$iterSuffix")
-                  .orElse(results.get(d.task))
-                  .map(_.outputs).filter(_.nonEmpty)
-                // dependency `filter` (`oph_workflow_structs.h:90`,
-                // default "all"): a 1-based index filter in the subset
-                // grammar selecting WHICH of a fan-out producer's
-                // outputs flow in; output_order then indexes the
-                // filtered list
-                val fanOut = (d.filter, fanOut0) match {
-                  case ("all", f) => f
-                  case (flt, Some(arr)) =>
-                    val spec =
-                      try graft.core.Subset.parse(flt, Some(arr.size.toLong))
-                      catch {
-                        case e: Exception => throw new Engine.EngineError(
-                          s"dependency on '${d.task}': bad filter '$flt': " +
-                            e.getMessage)
-                      }
-                    val kept = arr.zipWithIndex.collect {
-                      case (p, i) if spec.contains(i + 1L) => p
-                    }
-                    if (kept.isEmpty)
-                      throw new Engine.EngineError(s"dependency on " +
-                        s"'${d.task}': filter '$flt' selects no outputs")
-                    Some(kept)
-                  case (flt, None) =>
-                    throw new Engine.EngineError(s"dependency on " +
-                      s"'${d.task}': filter '$flt' needs a fan-out producer")
-                }
-                fanOut match {
-                  case Some(arr) =>
-                    arr.lift(d.outputOrder).orElse(
-                      throw new Engine.EngineError(s"dependency on " +
-                        s"'${d.task}': no output ${d.outputOrder}"))
-                  case None if d.outputOrder > 0 =>
-                    throw new Engine.EngineError(s"dependency on " +
-                      s"'${d.task}': no output ${d.outputOrder}")
-                  case None => outPids.get(s"${d.task}$iterSuffix")
-                    .orElse(outPids.get(d.task))
-                }
+              // checkpointed: replay the prior result (output cube
+              // verified to still exist) instead of re-executing
+              val r =
+                if (!t.run) TaskResult(JobStatus.Skipped)
+                else checkpointSkip.getOrElse(name, execute(t, args0))
+              results(name) = r
+              r.cubePid.foreach { p =>
+                pinForRun(p)
+                outPids(name) = p
+                outPids(t.name) = p
               }
-              val explicitDeps = t.dependencies
-                .filter(_.depType != "embedded") // argument default "cube"
-              lazy val routed = explicitDeps.groupBy(_.argument.getOrElse("cube"))
-                .foldLeft(args) { case (m, (argName, ds)) =>
-                  if (m.contains(argName)) m
-                  else {
-                    val pids = ds.sortBy(_.order).flatMap(depPid)
-                    if (pids.isEmpty) m else m + (argName -> pids.mkString("|"))
-                  }
-                }
-              // the legacy fallback injects ONLY embedded deps into
-              // 'cube' — a dep explicitly routed to another slot must
-              // not double as the cube input (intercube(B,B) otherwise).
-              // lazy: routing errors (bad output_order, unsupported
-              // filter) must surface inside the attempt loop so the
-              // task's on_error policy applies to them too
-              lazy val withCube: Map[String, String] =
-                if (routed.contains("cube") || t.dependencies.isEmpty) routed
-                else t.dependencies.reverseIterator
-                  .filter(_.depType == "embedded")
-                  .flatMap(depPid)
-                  .nextOption()
-                  .map(p => routed + ("cube" -> p)).getOrElse(routed)
-              // on_error=repeat retries with linear backoff before
-              // giving up (reference auto-retry, engine.c:860-877)
-              val maxAttempts = if (t.onError == "repeat") 3 else 1
-              var attempt = 0
-              var settled = false
-              while (!settled) {
-                attempt += 1
-                try {
-                  runPinContext.set(pinForRun)
-                  val r =
-                    try withTaskPermit(runDataOperator(t.operator, withCube))
-                    finally runPinContext.remove()
-                  results(s"${t.name}$iterSuffix") = r
-                  // massive fan-outs carry every produced pid in
-                  // `outputs`; pin them all — any can be a later dep
-                  r.outputs.foreach(pinForRun)
-                  r.cubePid.foreach { p =>
-                    pinForRun(p)
-                    outPids(s"${t.name}$iterSuffix") = p
-                    outPids(t.name) = p
-                    // on_exit: collect this task's output for the
-                    // workflow-end exit action
-                    // (`oph_workflow_define.h:77-79`)
-                    if (t.onExit == "oph_delete" ||
-                        t.onExit == "oph_deletecontainer")
-                      exitActions += ((t.onExit, p))
-                  }
-                  i += 1
-                  settled = true
-                } catch {
-                  case e: Exception if attempt < maxAttempts =>
-                    sessions.log(
-                      s"${t.name}: attempt $attempt failed, retrying (${e.getMessage})")
-                    Thread.sleep(50L * attempt)
-                  case e: Exception =>
-                    results(s"${t.name}$iterSuffix") =
-                      TaskResult(JobStatus.Error, message = e.getMessage)
-                    settled = true
-                    t.onError match {
-                      case "skip" | "continue" | "nop" | "repeat" => i += 1
-                      case "break" => return 1
-                      case _ =>
-                        // abort: mark the remainder and propagate
-                        (i + 1 until until).foreach(k =>
-                          results(s"${spec.tasks(k).name}$iterSuffix") =
-                            TaskResult(JobStatus.Aborted))
-                        return 2
-                    }
-                }
+              0
+          } catch {
+            case e: Exception =>
+              results(name) = TaskResult(JobStatus.Error, message = e.getMessage)
+              t.onError match {
+                case "skip" | "continue" | "nop" | "repeat" => 0
+                case "break" => 1
+                case _ => drain(i + 1, JobStatus.Aborted); 2
               }
-            }
-        }
+          }
+        if (signal != 0) return signal
+        i = next
       }
       0
     }
 
-    // finally: an exception escaping runBlock (bad oph_set value, bad
-    // counter string, rethrown parallel-branch failure) must not leave
-    // a stale job group on the driver thread or an unsaved run —
+    // finally: an exception escaping runBlock (a JVM Error; task
+    // failures follow on_error inside it) must not leave a stale job
+    // group on the driver thread or an unsaved run —
     // otherwise a later oph_cancel of this id hits unrelated jobs and
     // oph_resume can't see the failure
     // admission: refuse past farm+queue, then QUEUE behind the farm —
@@ -1598,6 +1493,18 @@ final class Engine(
 
   // ----------------------------------------------------- data operators
 
+  /** `cdd` (current data directory, `oph_workflow_parsing.c:91-95`):
+    * a relative file path resolves against it when one was supplied;
+    * absolute paths, URIs, massive filters and cdd-less requests pass
+    * through untouched (a bare relative path keeps resolving against
+    * the process cwd). */
+  private def resolveCdd(cdd: Option[String], p: String): String = cdd match {
+    case Some(base)
+      if !p.startsWith("/") && !p.contains("://") && !p.startsWith("[") =>
+      (if (base.endsWith("/")) base else base + "/") + p
+    case _ => p
+  }
+
   /** The Tier-C dispatch: operator name -> Spark execution. A massive
     * `cube=[...]` argument fans the task out over EVERY matching cube
     * (one light task per match, `oph_workflow_engine.c:1002-1057`);
@@ -1615,21 +1522,27 @@ final class Engine(
       case e: ArgSpecs.ArgError => throw new Engine.EngineError(e.getMessage)
     }
 
+    // massive fan-out: one light sub-task per `matches` entry bound to
+    // argument `slot`, or with run=no only the '|'-joined match list
+    def fanOut(filter: String, slot: String, matches: Seq[String],
+        noMatch: String): TaskResult = {
+      if (matches.isEmpty) throw new Engine.EngineError(noMatch)
+      else if (!MassiveFilter.parse(filter).runEnabled)
+        TaskResult(JobStatus.Completed, message = matches.mkString("|"))
+      else {
+        val sub = matches.map(m => runDataOperator(operator, args + (slot -> m)))
+        TaskResult(JobStatus.Completed,
+          cubePid = sub.lastOption.flatMap(_.cubePid),
+          message = sub.map(r => r.cubePid.getOrElse(r.message)).mkString("|"),
+          outputs = sub.flatMap(_.cubePid))
+      }
+    }
+
     args.get("cube").filter(_.contains("[")).foreach { cubeArg =>
-      val spec = MassiveFilter.parse(cubeArg)
-      val entries = MassiveFilter.expand(cubeArg, catalog,
-        args.getOrElse("cwd", "/"))
-      if (entries.isEmpty)
-        throw new Engine.EngineError(s"$op: no cubes match $cubeArg")
-      val pids = entries.map(_.pid(catalog))
-      if (!spec.runEnabled)
-        return TaskResult(JobStatus.Completed, message = pids.mkString("|"))
-      val sub = pids.map(p => runDataOperator(operator, args + ("cube" -> p)))
-      return TaskResult(JobStatus.Completed,
-        cubePid = sub.lastOption.flatMap(_.cubePid),
-        message = sub.map(r =>
-          r.cubePid.getOrElse(r.message)).mkString("|"),
-        outputs = sub.flatMap(_.cubePid))
+      return fanOut(cubeArg, "cube",
+        MassiveFilter.expand(cubeArg, catalog, args.getOrElse("cwd", "/"))
+          .map(_.pid(catalog)),
+        s"$op: no cubes match $cubeArg")
     }
 
     def needCube(): (String, Cube) = {
@@ -1639,17 +1552,7 @@ final class Engine(
         throw new Engine.EngineError(s"$op: unknown cube $pidArg")))
     }
 
-    // `cdd` (current data directory, `oph_workflow_parsing.c:91-95`):
-    // relative file paths resolve against it when one was supplied;
-    // absolute paths, URIs and cdd-less requests pass through untouched
-    // (a bare relative path keeps resolving against the process cwd as
-    // before)
-    def resolvePath(p: String): String = args.get("cdd") match {
-      case Some(base)
-        if !p.startsWith("/") && !p.contains("://") && !p.startsWith("[") =>
-        (if (base.endsWith("/")) base else base + "/") + p
-      case _ => p
-    }
+    def resolvePath(p: String): String = resolveCdd(args.get("cdd"), p)
 
     op match {
       case "oph_createcontainer" =>
@@ -1665,20 +1568,10 @@ final class Engine(
         // massive src_path: `[path=...;file=*x*;recursive=yes]` fans the
         // import out over every matching FILE, one cube per file
         // (`oph_massive_operations.c:222-258`)
-        if (path.contains("[")) {
-          val files =
-            MassiveFilter.expandFiles(path, cdd = args.getOrElse("cdd", "/"))
-          if (files.isEmpty)
-            throw new Engine.EngineError(s"import: no files match $path")
-          if (!MassiveFilter.parse(path).runEnabled)
-            return TaskResult(JobStatus.Completed, message = files.mkString("|"))
-          val sub = files.map(f =>
-            runDataOperator(operator, args + ("src_path" -> f)))
-          return TaskResult(JobStatus.Completed,
-            cubePid = sub.lastOption.flatMap(_.cubePid),
-            message = sub.map(r => r.cubePid.getOrElse(r.message)).mkString("|"),
-            outputs = sub.flatMap(_.cubePid))
-        }
+        if (path.contains("["))
+          return fanOut(path, "src_path",
+            MassiveFilter.expandFiles(path, cdd = args.getOrElse("cdd", "/")),
+            s"import: no files match $path")
         val paths = path.split('|').toSeq.map(resolvePath) // importncs: multi-file, one cube
         val measure = args.getOrElse("measure", "measure")
         val exp = args.get("exp_dim").map(_.split('|').toSeq).getOrElse(Seq.empty)

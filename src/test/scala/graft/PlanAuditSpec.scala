@@ -195,22 +195,6 @@ class PlanAuditSpec extends SparkSpec {
       s"unprojected variable must be pruned from the scan: $scanLine")
   }
 
-  test("asofBucketed keeps the heavy window partitioned by (key, bucket)") {
-    import spark.implicits._
-    val left = Seq((1L, 10L, "a"), (1L, 2500L, "b")).toDF("k", "t", "ev")
-    val right = Seq((1L, 5L, 1.0), (1L, 1800L, 2.0)).toDF("k", "t", "v")
-    val out = graft.operators.Joins.asofBucketed(left, right, Seq("k"),
-      "t", "t", Seq("v"), bucketWidth = 1000L)
-    val p = plan(out)
-    assert(!p.contains("NestedLoop") && !p.contains("Cartesian"),
-      s"asofBucketed must never theta-join:\n$p")
-    // the FILL window (the one over the unioned stream) must partition
-    // by the bucket as well as the key — that split IS the skew escape
-    val windowLines = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windowLines.exists(l => l.contains("__b") && l.contains("k#")),
-      s"the fill window must partition by (key, __b):\n${windowLines.mkString("\n")}")
-  }
-
   test("sql_q18 plans top-k without a global sort and no cartesian") {
     // the q18 shape at 100 TB: lineitem aggregates before any join
     // (HAVING shrinks the qualifier set), and ORDER BY + LIMIT becomes

@@ -217,75 +217,4 @@ class JoinsSpec extends SparkSpec {
       .queryExecution.optimizedPlan.toString
     assert(!plan.contains("Cross"), s"cartesian in plan:\n$plan")
   }
-
-  test("asofBucketed: parity with asof on a hot-key fixture") {
-    // one key carries 5000 of 5001 rows — the shape where plain asof
-    // serializes into a single window task and the bucketed variant
-    // splits it over time buckets
-    val trades = ((0 until 5000).map(i => (1L, (i * 37 + 11) % 10000L,
-      s"t$i")) :+ ((2L, 500L, "x"))).toDF("k", "t", "tag")
-    val quotes = Seq((1L, 0L, 1.0), (1L, 2500L, 2.0), (1L, 2500L, 2.5),
-      (1L, 7000L, 3.0), (2L, 100L, 9.0), (3L, 1L, 7.0))
-      .toDF("k", "t", "px")
-    for (strict <- Seq(false, true)) {
-      val plain = Joins.asof(trades, quotes, Seq("k"), "t", "t",
-        Seq("px"), strict)
-        .select($"k", $"t", $"tag", $"matched_t", $"px")
-        .as[(Long, Long, String, Long, Double)].collect().toSet
-      val bucketed = Joins.asofBucketed(trades, quotes, Seq("k"), "t", "t",
-        Seq("px"), bucketWidth = 1000L, strict = strict)
-        .select($"k", $"t", $"tag", $"matched_t", $"px")
-        .as[(Long, Long, String, Long, Double)].collect().toSet
-      assert(bucketed == plain,
-        s"strict=$strict: ${bucketed.size} vs ${plain.size}; " +
-          s"diff=${(bucketed diff plain).take(3)} | ${(plain diff bucketed).take(3)}")
-    }
-  }
-
-  test("asofBucketed: bucket-boundary and empty-bucket edges") {
-    // quotes only in bucket 0; trades in buckets 0..3, including the
-    // exact boundary instants — state must cascade through buckets
-    // that contain no right rows at all
-    val quotes = Seq((1L, 10L, 1.0), (1L, 99L, 2.0)).toDF("k", "t", "px")
-    val trades = Seq((1L, 5L, "early"), (1L, 10L, "eq"), (1L, 100L, "b1"),
-      (1L, 250L, "b2"), (1L, 399L, "b3")).toDF("k", "t", "tag")
-    val out = Joins.asofBucketed(trades, quotes, Seq("k"), "t", "t",
-      Seq("px"), bucketWidth = 100L)
-      .select($"tag", $"matched_t", $"px").as[(String, Long, Double)]
-      .collect().toSet
-    // t=5 precedes every quote -> dropped; t=10 inclusive equal-time;
-    // later buckets all inherit the t=99 quote across empty buckets
-    assert(out == Set(("eq", 10L, 1.0), ("b1", 99L, 2.0),
-      ("b2", 99L, 2.0), ("b3", 99L, 2.0)))
-  }
-
-  test("asofBucketed: whole-row null payloads agree with asof across bucket edges") {
-    // the matched right row joins WHOLE (DuckDB ASOF JOIN semantics —
-    // the oracle this operator is graded against): the latest row's
-    // null px stays null rather than resurrecting an older row's
-    // value, including when the older row sits in an earlier BUCKET
-    // (round-12 review finding; the previous per-column fill paired
-    // (time, payload) tuples that never existed)
-    val quotes = Seq(
-      (1L, 10L, Some(1.0), Option.empty[Long]),  // px only, bucket 0
-      (1L, 80L, Option.empty[Double], Some(7L)), // sz only, later in b0
-      (1L, 250L, Option.empty[Double], Some(9L)) // sz only, bucket 2
-    ).toDF("k", "t", "px", "sz")
-    val trades = Seq((1L, 90L, "a"), (1L, 150L, "b"), (1L, 300L, "c"))
-      .toDF("k", "t", "tag")
-    for (strict <- Seq(false, true)) {
-      val plain = Joins.asof(trades, quotes, Seq("k"), "t", "t",
-        Seq("px", "sz"), strict)
-        .select($"tag", $"matched_t", $"px", $"sz")
-        .as[(String, Long, Option[Double], Option[Long])].collect().toSet
-      val bucketed = Joins.asofBucketed(trades, quotes, Seq("k"), "t", "t",
-        Seq("px", "sz"), bucketWidth = 100L, strict = strict)
-        .select($"tag", $"matched_t", $"px", $"sz")
-        .as[(String, Long, Option[Double], Option[Long])].collect().toSet
-      assert(bucketed == plain, s"strict=$strict: $bucketed vs $plain")
-      // every emitted (time, payload) tuple is a REAL right row
-      assert(plain == Set(("a", 80L, None, Some(7L)),
-        ("b", 80L, None, Some(7L)), ("c", 250L, None, Some(9L))))
-    }
-  }
 }

@@ -97,4 +97,23 @@ class CcParitySpec extends SparkSpec {
     val got = run(verts, edges)
     assert(got.size == n && got.values.forall(_ == 1L))
   }
+
+  test("non-integral id columns are rejected by name") {
+    // a cast to long would turn these ids into nulls and drop edges
+    val longV = Seq(1L, 2L).toDF("id")
+    val longE = Seq((1L, 2L)).toDF("src", "dst")
+    val cases = Seq(
+      ("id", Seq("a", "b").toDF("id"), longE),
+      ("src", longV, Seq(("a", 2L)).toDF("src", "dst")),
+      ("dst", longV, Seq((1L, 2.5)).toDF("src", "dst")))
+    for ((c, v, e) <- cases) {
+      val err = intercept[IllegalArgumentException](
+        Dedup.connectedComponents(v, e))
+      assert(err.getMessage.contains(s"'$c'"), s"$c: ${err.getMessage}")
+    }
+    // narrower integral types are accepted and widened
+    val got = Dedup.connectedComponents(Seq(1, 2, 3).toDF("id"),
+      Seq((1, 2)).toDF("src", "dst")).as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+  }
 }

@@ -130,6 +130,25 @@ class HttpServiceSpec extends SparkSpec {
     }
   }
 
+  test("a task failing under on_error=skip answers 200 with error 3") {
+    // a bad substitution is a failed task, not a failed request
+    withService { (_, base, _) =>
+      val (code, body) = http(s"$base/services/execute", "POST", Some("""{
+        "name": "wf_skip", "exec_mode": "sync", "tasks": [
+          {"name": "X", "operator": "oph_createcontainer",
+           "on_error": "skip", "arguments": ["container=@{x"]},
+          {"name": "NEXT", "operator": "oph_set", "arguments": ["key=c"]}
+        ]}"""), Some(basic("graft", "secret")))
+      assert(code == 200, body)
+      val n = mapper.readTree(body)
+      assert(n.get("error").asInt == HttpService.ErrGeneric, body)
+      assert(!n.get("response").isNull, body)
+      val (_, s) = http(s"$base/services/status?jobid=${n.get("jobid").asInt}",
+        authHeader = Some(basic("graft", "secret")))
+      assert(mapper.readTree(s).get("status").asText == "error", s)
+    }
+  }
+
   test("bearer tokens authenticate; revoked tokens do not") {
     withService { (svc, base, _) =>
       val token = svc.auth.login("graft", "secret").get

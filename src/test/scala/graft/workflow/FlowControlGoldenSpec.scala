@@ -57,7 +57,7 @@ class FlowControlGoldenSpec extends SparkSpec {
   }
 
   test("if 9/10: unresolved 'x' and malformed '---' conditions error") {
-    for (c <- Seq("x", "---")) {
+    for (c <- Seq("x", "---", "1.2.3", ".")) {
       val (r, _) = runIf(c)
       assert(r.status == JobStatus.Error, s"condition $c")
     }
