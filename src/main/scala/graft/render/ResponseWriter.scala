@@ -22,7 +22,7 @@ import graft.core._
  * The writer is driver-side by design: response objects are the
  * human-facing slice (explore/list/metadata outputs), never the data
  * plane. Grids built from DataFrames go through `gridOf(df, limit)`
- * which caps the collect.
+ * which caps the collect (`MaxGridRows` in a response).
  */
 object ResponseWriter {
 
@@ -146,9 +146,13 @@ object ResponseWriter {
       "response" -> arr(r.objects.map(render)))
   }
 
+  /** The most rows a response grid shows, whatever the operator's own
+    * limit (explorecube's `limit_filter` included). */
+  val MaxGridRows = 100
+
   /** Build a Grid from a DataFrame (driver-side, capped collect). */
   def gridOf(objkey: String, title: String, df: DataFrame,
-      limit: Int = 100): Grid = {
+      limit: Int = MaxGridRows): Grid = {
     val capped = df.limit(limit)
     val keys = capped.columns.toSeq
     val types = capped.schema.fields.toSeq.map(f => SparkTypeName(f.dataType))

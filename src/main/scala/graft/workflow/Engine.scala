@@ -2,6 +2,7 @@ package graft.workflow
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.InternalRowBridge
 
 import graft.core.{Catalog, JobStatus, MassiveFilter, Subset}
 import graft.cube.{Cube, CubeOps}
@@ -702,7 +703,8 @@ final class Engine(
     val base =
       if (isCompact) {
         val grids = sorted.collect { case (name, r) if r.df.nonEmpty =>
-          graft.render.ResponseWriter.gridOf(name, name, r.df.get, limit = 100)
+          graft.render.ResponseWriter.gridOf(name, name, r.df.get,
+            limit = graft.render.ResponseWriter.MaxGridRows)
         }
         val errors = sorted.collect {
           case (name, r) if r.df.isEmpty && r.status == JobStatus.Error =>
@@ -717,7 +719,8 @@ final class Engine(
       } else sorted.flatMap { case (name, r) =>
         (r.df match {
           case Some(df) =>
-            graft.render.ResponseWriter.gridOf(name, name, df, limit = 100)
+            graft.render.ResponseWriter.gridOf(name, name, df,
+              limit = graft.render.ResponseWriter.MaxGridRows)
           case None => textOf(name, r)
         }) +: r.aux
       }
@@ -1940,41 +1943,37 @@ final class Engine(
           args.get("level").flatMap(_.toIntOption).exists(_ >= 2)
         val wantDims =
           args.get("show_index").exists(_.equalsIgnoreCase("yes"))
-        val aux = Seq.newBuilder[graft.core.ResponseObject]
-        if (wantSummary || wantDims) {
-          // the aux scans each re-run the subset plan — cache it ONLY
-          // when more than one scan follows (a lone count is cheaper
-          // through the pruned scan than via a full materialization)
-          val scans = (if (wantSummary) 1 else 0) +
-            (if (wantDims) sub.desc.explicitDims.size else 0)
-          if (scans > 1) sub.df.persist()
-          try {
-            if (wantSummary) {
-              val total = sub.df.count()
-              // the renderer caps grids at 100 rows regardless of
-              // limit_filter — report what is actually shown
-              aux += graft.core.TextObj("explorecube_summary", "Summary",
-                s"total rows: $total; displayed: " +
-                  s"${math.min(total, math.min(limit, 100))}")
+        // the full scans (the counting pass, one per dimension) each
+        // re-run the subset plan — cache it when more than one follows
+        val scans = (if (wantSummary) 1 else 0) +
+          (if (wantDims) sub.desc.explicitDims.size else 0)
+        if (scans > 1) sub.df.persist()
+        try {
+          // one Spark execution yields the shown rows and, for the
+          // summary, the total; the task's frame holds just those rows,
+          // so rendering it runs no Spark job
+          val shown = math.min(limit, graft.render.ResponseWriter.MaxGridRows)
+          val (head, total) = InternalRowBridge.headAndCount(sub.df, shown,
+            wantSummary, "explorecube")
+          val aux = Seq.newBuilder[graft.core.ResponseObject]
+          total.foreach(t =>
+            aux += graft.core.TextObj("explorecube_summary", "Summary",
+              s"total rows: $t; displayed: ${math.min(t, shown)}"))
+          if (wantDims) {
+            val dimRows = sub.desc.explicitDims.map { d =>
+              val vals = sub.df.select(sub.df(d.name)).distinct()
+                .orderBy(sub.df(d.name)).limit(limit).collect()
+                .map(r => Option(r.get(0)).map(_.toString).getOrElse("null"))
+              Seq(d.name, vals.mkString("|"))
             }
-            if (wantDims) {
-              val dimRows = sub.desc.explicitDims.map { d =>
-                val vals = sub.df.select(sub.df(d.name)).distinct()
-                  .orderBy(sub.df(d.name)).limit(limit).collect()
-                  .map(r => Option(r.get(0)).map(_.toString).getOrElse("null"))
-                Seq(d.name, vals.mkString("|"))
-              }
-              aux += graft.core.Grid("explorecube_dimvalues",
-                "Dimension Values",
-                keys = Seq("DIMENSION", "VALUES"),
-                fieldTypes = Seq("string", "string"),
-                values = dimRows)
-            }
-          } finally if (scans > 1) sub.df.unpersist(blocking = false)
-        }
-        TaskResult(JobStatus.Completed,
-          df = Some(CubeOps.explorecube(sub, None, limit)),
-          aux = aux.result())
+            aux += graft.core.Grid("explorecube_dimvalues",
+              "Dimension Values",
+              keys = Seq("DIMENSION", "VALUES"),
+              fieldTypes = Seq("string", "string"),
+              values = dimRows)
+          }
+          TaskResult(JobStatus.Completed, df = Some(head), aux = aux.result())
+        } finally if (scans > 1) sub.df.unpersist(blocking = false)
 
       case "oph_cubeschema" =>
         val (_, c) = needCube()
