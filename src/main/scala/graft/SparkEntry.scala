@@ -3510,7 +3510,8 @@ object SparkEntry {
       record("inspectfrag", "oph_inspectfrag", _.replace("\n", " // "),
         "cube" -> one, "frag_id" -> "0", "limit" -> "2")
       val grid = eng.runDataOperator("oph_showgrid", Map("cube" -> one))
-      out += (("showgrid", grid.df.get.collect().mkString("|")))
+      out += (("showgrid", grid.grid.get.values
+        .map(_.mkString("[", ",", "]")).mkString("|")))
       step("tasks", "oph_tasks")
       step("loggingbk", "oph_loggingbk")
       // the minted code is itself a recorded (and therefore oracled)
@@ -3655,12 +3656,16 @@ object SparkEntry {
         Map("cube" -> pid, "output_path" -> s"$tmp/orders.nc"))
       val st = eng.runDataOperator("oph_explorenc", Map(
         "src_path" -> s"$tmp/orders.nc", "measure" -> "o_totalprice",
-        "show_stats" -> "101000111")).df.get
-      st.select(round(col("mean"), 3).as("m_mean"),
-        round(col("std"), 2).as("m_std"),
-        round(col("min"), 2).as("m_min"),
-        round(col("max"), 2).as("m_max"),
-        round(col("range"), 2).as("m_range"))
+        "show_stats" -> "101000111")).grid.get
+      val v = st.keys.zip(st.values.head.map(_.toDouble)).toMap
+      import s.implicits._
+      Seq((v("mean"), v("std"), v("min"), v("max"), v("range")))
+        .toDF("mean", "std", "min", "max", "range")
+        .select(round(col("mean"), 3).as("m_mean"),
+          round(col("std"), 2).as("m_std"),
+          round(col("min"), 2).as("m_min"),
+          round(col("max"), 2).as("m_max"),
+          round(col("range"), 2).as("m_range"))
     }),
 
     "workflow_resume" -> ((s, dir) => {
@@ -3689,14 +3694,13 @@ object SparkEntry {
       val listing = eng.runDataOperator("oph_resume", Map(
         "id_type" -> "marker", "level" -> "3",
         "document_type" -> "request", "status_filter" -> "11111111"))
-        .df.get.collect()
-      val replayed = listing.toSeq.map { row =>
-        val marker = row.getString(3).toInt
+        .grid.get.values
+      val replayed = listing.map { row =>
+        val marker = row(3).toInt
         val doc = eng.runDataOperator("oph_resume", Map(
           "id" -> marker.toString, "id_type" -> "marker",
           "document_type" -> "request")).message
-        (row.getString(2).toInt, marker, row.getString(5).toInt,
-          row.getString(6), doc)
+        (row(2).toInt, marker, row(5).toInt, row(6), doc)
       }
       import s.implicits._
       replayed.toDF("wf_id", "marker", "parent", "command", "replayed_doc")

@@ -801,12 +801,14 @@ object CubeOps {
   /** Schema listing as a DataFrame (dimension name, kind, type). */
   def cubeschema(spark: SparkSession, cube: Cube): DataFrame = {
     import spark.implicits._
-    val rows =
-      cube.desc.explicitDims.map(d => (d.name, "explicit", d.dataType)) ++
+    schemaRows(cube).toDF("name", "kind", "dtype")
+  }
+
+  /** The (name, kind, dtype) rows of `cubeschema`, on the driver. */
+  def schemaRows(cube: Cube): Seq[(String, String, String)] =
+    cube.desc.explicitDims.map(d => (d.name, "explicit", d.dataType)) ++
       cube.desc.implicitDims.map(d => (d.name, "implicit", d.dataType)) :+
       ((cube.desc.measure, "measure", cube.desc.measureType))
-    rows.toDF("name", "kind", "dtype")
-  }
 
   /** Total element count = rows × in-cell array length (1 if scalar). */
   def cubeelements(cube: Cube): DataFrame = {

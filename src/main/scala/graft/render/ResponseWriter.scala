@@ -1,6 +1,8 @@
 package graft.render
 
-import org.apache.spark.sql.DataFrame
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
 
 import graft.core._
 
@@ -21,8 +23,9 @@ import graft.core._
  *
  * The writer is driver-side by design: response objects are the
  * human-facing slice (explore/list/metadata outputs), never the data
- * plane. Grids built from DataFrames go through `gridOf(df, limit)`
- * which caps the collect (`MaxGridRows` in a response).
+ * plane. Operators build their answer grids in their tasks (`gridOf`
+ * caps a frame's collect at `MaxGridRows`), so rendering a response is
+ * pure serialization. `read` inverts `render(o)` for the run store.
  */
 object ResponseWriter {
 
@@ -150,15 +153,46 @@ object ResponseWriter {
     * limit (explorecube's `limit_filter` included). */
   val MaxGridRows = 100
 
+  /** A grid cell: the value's `toString`, "null" for null. */
+  def cell(v: Any): String = Option(v).map(_.toString).getOrElse("null")
+
   /** Build a Grid from a DataFrame (driver-side, capped collect). */
   def gridOf(objkey: String, title: String, df: DataFrame,
       limit: Int = MaxGridRows): Grid = {
     val capped = df.limit(limit)
-    val keys = capped.columns.toSeq
-    val types = capped.schema.fields.toSeq.map(f => SparkTypeName(f.dataType))
-    val values = capped.collect().toSeq.map(row =>
-      keys.indices.map(i => Option(row.get(i)).map(_.toString).getOrElse("null")))
-    Grid(objkey, title, keys, types, values)
+    gridOf(objkey, title, capped.schema, capped.collect().toSeq)
+  }
+
+  /** Build a Grid from rows already on the driver. */
+  def gridOf(objkey: String, title: String, schema: StructType,
+      rows: Seq[Row]): Grid =
+    Grid(objkey, title, schema.fieldNames.toSeq,
+      schema.fields.toSeq.map(f => SparkTypeName(f.dataType)),
+      rows.map(_.toSeq.map(cell)))
+
+  /** A task answer object (text, grid or tree: what operators return)
+    * back from its `render(o)` wire form. */
+  def read(n: JsonNode): ResponseObject = {
+    import scala.jdk.CollectionConverters._
+    val c = n.get("objcontent").get(0)
+    def str(f: String) = c.get(f).asText
+    def strs(j: JsonNode) = j.asScala.map(_.asText).toSeq
+    def rows(f: String) = c.get(f).asScala.map(strs).toSeq
+    val key = n.get("objkey").asText
+    n.get("objclass").asText match {
+      case "text" => TextObj(key, str("title"), str("message"))
+      case "grid" => Grid(key, str("title"), strs(c.get("rowkeys")),
+        strs(c.get("rowfieldtypes")), rows("rowvalues"))
+      case "tree" => TreeObj(key, str("title"),
+        Option(c.get("description")).map(_.asText), str("rootnode").toInt,
+        strs(c.get("nodekeys")), rows("nodevalues").map(GraphNode),
+        c.get("nodelinks").asScala.zipWithIndex.flatMap { case (out, i) =>
+          out.asScala.map(l => GraphLink(i, l.get("node").asText.toInt,
+            Option(l.get("description")).map(_.asText).getOrElse("")))
+        }.toSeq)
+      case cls => throw new IllegalArgumentException(
+        s"'$key': no task answer is a $cls")
+    }
   }
 
   /** Pivoted cube slice as a MultiDimGrid (`oph_json_multigrid.h:50-71`):
@@ -183,8 +217,7 @@ object ResponseWriter {
       colValues = colValues,
       measureName = cube.desc.measure,
       measureType = cube.desc.measureType,
-      rowValues = rows.map(r => expIdx.map(i =>
-        Option(r.get(i)).map(_.toString).getOrElse("null"))),
+      rowValues = rows.map(r => expIdx.map(i => cell(r.get(i)))),
       measureValues = rows.map(r =>
         r.getSeq[Any](measureIdx).map(_.toString)))
   }

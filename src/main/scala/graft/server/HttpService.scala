@@ -53,8 +53,8 @@ object HttpService {
   val ErrSystem = 6
   val ErrWrongParameter = 7
 
-  /** Status entries hold only per-task STATUSES — retaining full
-    * TaskResults would pin DataFrame plans for the life of the map.
+  /** Status entries hold only per-task STATUSES — a status poll needs
+    * no answers, and the map lives as long as the service.
     * `cancel` targets the run's reserved workflow id on its engine
     * (the /services/cancel route). */
   final case class Job(id: Int,

@@ -1,14 +1,15 @@
 package graft.server
 
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 
 /**
  * Atomic file persistence for server state — the durability layer the
  * reference gets from OphidiaDB tables (`src/oph_auth.c` user table,
- * session metadata): write-to-temp + atomic move so a crash mid-save
- * never leaves a torn state file, and a missing file is simply "no
- * prior state".
+ * session metadata): write-to-temp, force to disk, then atomic move,
+ * so a crash mid-save never leaves a torn or unflushed state file
+ * under the real name, and a missing file is simply "no prior state".
  */
 object StateStore {
 
@@ -19,6 +20,8 @@ object StateStore {
       dir.getOrElse(Path.of(".")), path.getFileName.toString, ".tmp")
     try {
       Files.writeString(tmp, content, StandardCharsets.UTF_8)
+      val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
+      try ch.force(true) finally ch.close()
       Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
     } finally Files.deleteIfExists(tmp)

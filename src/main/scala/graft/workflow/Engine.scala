@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.InternalRowBridge
 
-import graft.core.{Catalog, JobStatus, MassiveFilter, Subset}
+import graft.core.{Catalog, Grid, JobStatus, MassiveFilter, ResponseObject,
+  Subset, TextObj}
 import graft.cube.{Cube, CubeOps}
 import graft.functions.ArrayPrimitives
+import graft.render.ResponseWriter
 
 /**
  * Workflow engine v1 — the driver-side scheduler that the reference
@@ -27,22 +29,21 @@ object Engine {
   final case class TaskResult(
       status: JobStatus.Value,
       cubePid: Option[String] = None,
-      df: Option[DataFrame] = None,
+      /** The task's answer grid, built inside the task (on its thread,
+        * under the workflow's job group) and capped at
+        * `ResponseWriter.MaxGridRows` rows: data, not a plan, so
+        * rendering, checkpoint replay and the run store take it as is. */
+      grid: Option[Grid] = None,
       message: String = "",
       /** Fan-out producers (massive cube/file expansion) list EVERY
         * minted pid here — dependency `output_order` indexes this,
         * never the human-facing message. */
       outputs: Seq[String] = Seq.empty,
-      /** True when the ORIGINAL run produced a DataFrame that was later
-        * stripped for storage (checkpoint store drops plans to avoid
-        * pinning them): such a task must RE-RUN on checkpoint resume or
-        * its grid would render as plain text. */
-      hadDf: Boolean = false,
       /** Extra fully-rendered response objects beyond the main grid —
         * the reference emits several objkeys per operator (e.g.
         * explorecube_data + _summary + _dimvalues,
         * `oph_json_objkeys.h:81-83`). */
-      aux: Seq[graft.core.ResponseObject] = Seq.empty)
+      aux: Seq[ResponseObject] = Seq.empty)
 
   final class EngineError(msg: String) extends Exception(msg)
 
@@ -184,11 +185,13 @@ final class Engine(
     sessionStateFile: Option[java.nio.file.Path] = None,
     /** Durable workflow-run store — the reference's `oph_workflow_save`
       * (`src/oph_workflow_engine.c:244-288`): each completed-or-aborted
-      * run's request document + per-task outcome persists, so a
-      * RESTARTED server honors `checkpoint` requests. Cube DataFrames
-      * do not survive a restart, so replayed entries whose cubes are
-      * gone re-execute and re-create the lineage deterministically;
-      * tasks with no cube output replay directly. None = memory only. */
+      * run's request document and every task's result (status, output
+      * pids and its answer: message, grid and aux objects) persist, so
+      * a RESTARTED server honors `checkpoint` requests and a replayed
+      * task renders exactly as it did. Cubes do not survive a restart,
+      * so entries whose cubes are gone re-execute and re-create the
+      * lineage deterministically; tasks with no cube output replay
+      * directly. None = memory only. */
     runStateFile: Option[java.nio.file.Path] = None) {
 
   import Engine._
@@ -561,13 +564,15 @@ final class Engine(
     scala.collection.concurrent.TrieMap[String, String]()
 
   private def persistRuns(): Unit = runStateFile.foreach { p =>
-    def q(s: String): String = graft.render.ResponseWriter.jsonQuote(s)
+    def q(s: String): String = ResponseWriter.jsonQuote(s)
     val runs = lastRuns.toSeq.flatMap { case (name, (_, results)) =>
       lastRunJson.get(name).map { js =>
         val rs = results.map { case (k, r) =>
           s"""{"task":${q(k)},"status":${q(r.status.toString)},""" +
             s""""cubePid":${r.cubePid.map(q).getOrElse("null")},""" +
-            s""""hadDf":${r.hadDf}}"""
+            s""""message":${q(r.message)},""" +
+            s""""grid":${r.grid.map(ResponseWriter.render).getOrElse("null")},""" +
+            s""""aux":[${r.aux.map(ResponseWriter.render).mkString(",")}]}"""
         }.mkString(",")
         s"""{"request":$js,"results":[$rs]}"""
       }
@@ -578,25 +583,27 @@ final class Engine(
   // restore recorded runs (torn/old-format state must never block
   // startup — a run that fails to parse is simply not resumable)
   runStateFile.flatMap(graft.server.StateStore.load).foreach { text =>
+    import scala.jdk.CollectionConverters._
     try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val n = mapper.readTree(text)
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
       Option(n.get("runs")).foreach { arr =>
-        arr.elements.forEachRemaining { run =>
+        arr.asScala.foreach { run =>
           try {
-            val reqNode = run.get("request")
-            val reqJson = reqNode.toString
+            val reqJson = run.get("request").toString
             val spec = Workflow.parse(reqJson)
-            val results = scala.collection.mutable.Map.empty[String, TaskResult]
-            Option(run.get("results")).foreach(_.elements.forEachRemaining {
-              r =>
-                results(r.get("task").asText) = TaskResult(
-                  JobStatus.withName(r.get("status").asText),
-                  cubePid = Option(r.get("cubePid"))
-                    .filterNot(_.isNull).map(_.asText),
-                  hadDf = Option(r.get("hadDf")).exists(_.asBoolean))
-            })
-            lastRuns(spec.name) = (spec, results.toMap)
+            // a run saved without its answers (an older format) throws
+            // here and is not resumable: its grid tasks would replay as
+            // text
+            lastRuns(spec.name) = (spec, run.get("results").asScala.map { r =>
+              r.get("task").asText -> TaskResult(
+                JobStatus.withName(r.get("status").asText),
+                cubePid = Option(r.get("cubePid")).filterNot(_.isNull)
+                  .map(_.asText),
+                grid = Option(r.get("grid")).filterNot(_.isNull)
+                  .map(g => ResponseWriter.read(g).asInstanceOf[Grid]),
+                message = r.get("message").asText,
+                aux = r.get("aux").asScala.map(ResponseWriter.read).toSeq)
+            }.toMap)
             lastRunJson(spec.name) = reqJson
           } catch {
             case e: Exception =>
@@ -664,11 +671,9 @@ final class Engine(
       }
     val completed = prior.collect {
       case (name, r) if r.status == JobStatus.Completed &&
-        // a stored result whose DataFrame was stripped cannot serve its
-        // grid on replay — render/peek tasks re-run (cheap: the plan is
-        // lazy, the data work already happened upstream)
-        !(r.hadDf && r.df.isEmpty) &&
-        r.cubePid.forall(cubes.contains) &&
+        // every output still exists — a fan-out's `cubePid` is only its
+        // last one, and a dependant may pick any by `output_order`
+        (r.cubePid ++ r.outputs).forall(cubes.contains) &&
         (name == baseName(name) || flowUnchanged) &&
         newTasks.get(baseName(name)).exists(t =>
           priorTasks.get(baseName(name)).contains(t)) => name -> r
@@ -677,8 +682,9 @@ final class Engine(
   }
 
   /** Render a run's results as the reference's JSON Response envelope
-    * (`src/oph_json/oph_json_common.c`): DataFrame results become
-    * grids, the rest text objects; keyed by task name.
+    * (`src/oph_json/oph_json_common.c`): a task's answer grid is shown
+    * under the task's name, the rest become text objects, keyed by task
+    * name. A pure function of the results: it runs no Spark job.
     * `outputFormat` follows `oph_workflow_parsing.c:291-298`: classic
     * keeps one object per task; compact collapses the per-task texts of
     * successful tasks into one summary object (grids and errors always
@@ -686,12 +692,14 @@ final class Engine(
   def renderResponse(workflowName: String,
       results: Map[String, TaskResult],
       outputFormat: String = "classic"): String = {
-    import graft.core.{Grid, Response, TextObj}
     def textOf(name: String, r: TaskResult) =
       TextObj(name, name,
         s"${r.status}" +
           r.cubePid.map(p => s" cube=$p").getOrElse("") +
           (if (r.message.nonEmpty) s" ${r.message}" else ""))
+    def gridOf(name: String, r: TaskResult) = r.grid.map(g => g.copy(
+      objkey = name, title = name,
+      values = g.values.take(ResponseWriter.MaxGridRows)))
     val sorted = results.toSeq.sortBy(_._1)
     // `oph_workflow_parsing.c:291-305` format matrix: compact collapses
     // the per-task texts into one status line; extended adds the
@@ -702,12 +710,9 @@ final class Engine(
     val isExtended = fmt == "extended" || fmt == "extended_compact"
     val base =
       if (isCompact) {
-        val grids = sorted.collect { case (name, r) if r.df.nonEmpty =>
-          graft.render.ResponseWriter.gridOf(name, name, r.df.get,
-            limit = graft.render.ResponseWriter.MaxGridRows)
-        }
+        val grids = sorted.flatMap { case (name, r) => gridOf(name, r) }
         val errors = sorted.collect {
-          case (name, r) if r.df.isEmpty && r.status == JobStatus.Error =>
+          case (name, r) if r.grid.isEmpty && r.status == JobStatus.Error =>
             textOf(name, r)
         }
         val okCount = sorted.count(_._2.status == JobStatus.Completed)
@@ -717,12 +722,7 @@ final class Engine(
           s"$okCount/${sorted.size} tasks completed") +:
           (errors ++ grids ++ sorted.flatMap(_._2.aux))
       } else sorted.flatMap { case (name, r) =>
-        (r.df match {
-          case Some(df) =>
-            graft.render.ResponseWriter.gridOf(name, name, df,
-              limit = graft.render.ResponseWriter.MaxGridRows)
-          case None => textOf(name, r)
-        }) +: r.aux
+        gridOf(name, r).getOrElse(textOf(name, r)) +: r.aux
       }
     val objs =
       if (!isExtended) base
@@ -732,7 +732,7 @@ final class Engine(
         values = sorted.map { case (name, r) =>
           Seq(name, r.status.toString, r.cubePid.getOrElse(""))
         }) +: base
-    graft.render.ResponseWriter.render(Response(
+    ResponseWriter.render(graft.core.Response(
       source = Map("session" -> catalog.sessionCode,
         "workflow" -> workflowName, "producer" -> user),
       consumers = Seq(user),
@@ -933,9 +933,6 @@ final class Engine(
               attempt(n + 1)
           }
         val r = attempt(1)
-        // massive fan-outs carry every produced pid in `outputs`; pin
-        // them all — any can be a later dep
-        r.outputs.foreach(pinForRun)
         // on_exit: collect this task's output for the workflow-end
         // exit action (`oph_workflow_define.h:77-79`)
         if (t.onExit == "oph_delete" || t.onExit == "oph_deletecontainer")
@@ -1173,6 +1170,9 @@ final class Engine(
                 if (!t.run) TaskResult(JobStatus.Skipped)
                 else checkpointSkip.getOrElse(name, execute(t, args0))
               results(name) = r
+              // massive fan-outs carry every produced pid in `outputs`;
+              // pin them all — any can be a later dep
+              r.outputs.foreach(pinForRun)
               r.cubePid.foreach { p =>
                 pinForRun(p)
                 outPids(name) = p
@@ -1271,12 +1271,9 @@ final class Engine(
       }
       // record for request-level checkpoint resume (the ORIGINAL spec:
       // runFrom compares task definitions against the next request).
-      // df is stripped — replay only needs status/cubePid/outputs, and
-      // retaining it would pin one DataFrame plan per workflow name for
-      // the engine's lifetime; the map itself is bounded the same way
-      lastRuns(spec0.name) =
-        (spec0, results.toMap.map { case (k, r) =>
-          k -> r.copy(df = None, hadDf = r.df.nonEmpty) })
+      // Results are data (answers are built grids, capped in size), so
+      // they are kept as they are; the map itself is bounded
+      lastRuns(spec0.name) = (spec0, results.toMap)
       if (lastRuns.size > Engine.MaxLastRuns)
         lastRuns.keys.filter(_ != spec0.name)
           .take(lastRuns.size - Engine.MaxLastRuns).foreach { k =>
@@ -1515,6 +1512,20 @@ final class Engine(
     * (engine.c:1058-1065). */
   def runDataOperator(operator: String, args: Map[String, String]): TaskResult = {
     val op = operator.toLowerCase
+
+    // a grid-returning operator's answer: its grid, built here (the
+    // response names it after the task) and capped; a frame is collected
+    // now, on the task's thread under the workflow's job group
+    def answer(grid: Grid, aux: Seq[ResponseObject] = Seq.empty) =
+      TaskResult(JobStatus.Completed, aux = aux, grid = Some(
+        grid.copy(values = grid.values.take(ResponseWriter.MaxGridRows))))
+    def frameGrid(df: DataFrame): Grid = ResponseWriter.gridOf(op, op, df)
+    def localGrid(keys: Seq[String], types: Seq[String],
+        rows: Seq[Seq[Any]]): Grid =
+      Grid(op, op, keys, types, rows.map(_.map(ResponseWriter.cell)))
+    def schemaGrid(c: Cube): Grid =
+      localGrid(Seq("name", "kind", "dtype"), Seq.fill(3)("string"),
+        CubeOps.schemaRows(c).map { case (n, k, t) => Seq(n, k, t) })
 
     // runtime pass of the descriptor checks on SUBSTITUTED values —
     // a `@var` that resolves outside an enum/domain must fail loudly,
@@ -1950,42 +1961,35 @@ final class Engine(
         if (scans > 1) sub.df.persist()
         try {
           // one Spark execution yields the shown rows and, for the
-          // summary, the total; the task's frame holds just those rows,
-          // so rendering it runs no Spark job
-          val shown = math.min(limit, graft.render.ResponseWriter.MaxGridRows)
-          val (head, total) = InternalRowBridge.headAndCount(sub.df, shown,
-            wantSummary, "explorecube")
-          val aux = Seq.newBuilder[graft.core.ResponseObject]
-          total.foreach(t =>
-            aux += graft.core.TextObj("explorecube_summary", "Summary",
-              s"total rows: $t; displayed: ${math.min(t, shown)}"))
-          if (wantDims) {
-            val dimRows = sub.desc.explicitDims.map { d =>
-              val vals = sub.df.select(sub.df(d.name)).distinct()
+          // summary, the total; the task's grid holds just those rows
+          val shown = math.min(limit, ResponseWriter.MaxGridRows)
+          val (schema, head, total) = InternalRowBridge.headAndCount(
+            sub.df, shown, wantSummary, "explorecube")
+          val summary = total.map(t => TextObj("explorecube_summary",
+            "Summary", s"total rows: $t; displayed: ${math.min(t, shown)}"))
+          val dimValues = Option.when(wantDims)(Grid("explorecube_dimvalues",
+            "Dimension Values", keys = Seq("DIMENSION", "VALUES"),
+            fieldTypes = Seq("string", "string"),
+            values = sub.desc.explicitDims.map { d =>
+              Seq(d.name, sub.df.select(sub.df(d.name)).distinct()
                 .orderBy(sub.df(d.name)).limit(limit).collect()
-                .map(r => Option(r.get(0)).map(_.toString).getOrElse("null"))
-              Seq(d.name, vals.mkString("|"))
-            }
-            aux += graft.core.Grid("explorecube_dimvalues",
-              "Dimension Values",
-              keys = Seq("DIMENSION", "VALUES"),
-              fieldTypes = Seq("string", "string"),
-              values = dimRows)
-          }
-          TaskResult(JobStatus.Completed, df = Some(head), aux = aux.result())
+                .map(r => ResponseWriter.cell(r.get(0))).mkString("|"))
+            }))
+          answer(ResponseWriter.gridOf(op, op, schema, head),
+            aux = summary.toSeq ++ dimValues)
         } finally if (scans > 1) sub.df.unpersist(blocking = false)
 
       case "oph_cubeschema" =>
         val (_, c) = needCube()
-        TaskResult(JobStatus.Completed, df = Some(CubeOps.cubeschema(spark, c)))
+        answer(schemaGrid(c))
 
       case "oph_cubesize" =>
         val (_, c) = needCube()
-        TaskResult(JobStatus.Completed, df = Some(CubeOps.cubesize(c)))
+        answer(frameGrid(CubeOps.cubesize(c)))
 
       case "oph_cubeelements" =>
         val (_, c) = needCube()
-        TaskResult(JobStatus.Completed, df = Some(CubeOps.cubeelements(c)))
+        answer(frameGrid(CubeOps.cubeelements(c)))
 
       case "oph_exportcsv" | "oph_exportnc" | "oph_exportnc2" =>
         val (exportPid, c) = needCube()
@@ -2426,7 +2430,7 @@ final class Engine(
         if (statsMask.contains('1')) {
           // bit i of the mask enables statistic i (reference mask order:
           // mean|variance|std|skew|kurtosis|median|min|max|range);
-          // one distributed aggregation, no collect
+          // one distributed aggregation, one row collected
           val m = col(mcol).cast("double")
           val all = Seq[(String, org.apache.spark.sql.Column)](
             "mean" -> avg(m), "variance" -> var_samp(m),
@@ -2439,9 +2443,8 @@ final class Engine(
             case ('1', i) if i < all.size => all(i)
           }.toSeq
           val sel = if (picked.nonEmpty) picked else all
-          TaskResult(JobStatus.Completed, df = Some(
-            raw.agg(sel.head._2.as(sel.head._1),
-              sel.tail.map { case (n, c) => c.as(n) }: _*)))
+          answer(frameGrid(raw.agg(sel.head._2.as(sel.head._1),
+            sel.tail.map { case (n, c) => c.as(n) }: _*)))
         } else if (args.get("show_fit").exists(_.equalsIgnoreCase("yes"))) {
           // least-squares linear fit measure ~ x, computed from one
           // pass of distributed sums (no window, no collect): slope =
@@ -2462,10 +2465,9 @@ final class Engine(
             "explorenc: degenerate x axis (zero variance)")
           val slope = (n * sxy - sx * sy) / den
           val intercept = (sy - slope * sx) / n
-          import spark.implicits._
-          TaskResult(JobStatus.Completed, df = Some(
-            Seq((mcol, xcol.get, slope, intercept))
-              .toDF("measure", "dim", "slope", "intercept")))
+          answer(localGrid(Seq("measure", "dim", "slope", "intercept"),
+            Seq("string", "string", "double", "double"),
+            Seq(Seq(mcol, xcol.get, slope, intercept))))
         } else if (wavelet == "yes" || wavelet == "only") {
           // Haar DWT over the series (ordered by x, capped like every
           // render path — wavelets need the whole ordered series, so
@@ -2480,114 +2482,65 @@ final class Engine(
             case p if p == series.length => p
             case p => p * 2
           }
-          val data = java.util.Arrays.copyOf(series, n2)
-          if (series.nonEmpty)
-            (series.length until n2).foreach(i => data(i) = series.last)
+          val data = series.padTo(n2, series.lastOption.getOrElse(0.0))
           val family = args.getOrElse("wavelet_family", "haar").toLowerCase
-          if (family != "haar") {
-            // orthonormal DWT families (db4, ...): the shared pyramid
-            // kernel; level numbering matches the haar path (0 =
-            // finest details, final smooth at the top level)
-            val fw = graft.functions.Wavelet.forward(data, family)
-            val levels = 31 - Integer.numberOfLeadingZeros(n2)
-            val coeffs = Seq.newBuilder[(Int, Int, Double)]
-            (0 until levels).foreach { l =>
-              val base = n2 >> (l + 1)
-              (0 until base).foreach(p => coeffs += ((l, p, fw(base + p))))
-            }
-            coeffs += ((levels, 0, fw(0)))
-            val k = args.getOrElse("wavelet_coeff", "16").toInt
-            val top = coeffs.result()
-              .sortBy { case (_, _, c) => -math.abs(c) }.take(k)
-            import spark.implicits._
-            val coeffDf = top.toDF("level", "pos", "coeff")
-            if (wavelet == "only")
-              return TaskResult(JobStatus.Completed, df = Some(coeffDf))
-            val kept = new Array[Double](n2)
-            top.foreach { case (l, p, c) =>
-              kept(if (l == levels) 0 else (n2 >> (l + 1)) + p) = c
-            }
-            val rec = graft.functions.Wavelet.inverse(kept, family)
-            val recDf = rec.take(series.length).zipWithIndex
-              .map { case (v, i) => (i + 1, series(i), v) }.toSeq
-              .toDF("idx", "value", "denoised")
-            return TaskResult(JobStatus.Completed, df = Some(recDf),
-              aux = Seq(graft.core.Grid("explorenc_wavelet_coeff",
-                "Wavelet Coefficients",
-                keys = Seq("LEVEL", "POS", "COEFF"),
-                fieldTypes = Seq("int", "int", "double"),
-                values = top.map { case (l2, p2, c2) =>
-                  Seq(l2.toString, p2.toString, c2.toString) })))
-          }
-          // in-place Haar: averages in the front half, details behind
-          val coeffs = Seq.newBuilder[(Int, Int, Double)]
-          var len = n2
-          var level = 0
-          val buf = data.clone()
-          while (len > 1) {
-            val half = len / 2
-            val tmp = new Array[Double](len)
-            var i = 0
-            while (i < half) {
-              tmp(i) = (buf(2 * i) + buf(2 * i + 1)) / 2
-              tmp(half + i) = (buf(2 * i) - buf(2 * i + 1)) / 2
-              i += 1
-            }
-            System.arraycopy(tmp, 0, buf, 0, len)
-            (0 until half).foreach(p => coeffs += ((level, p, buf(half + p))))
-            len = half
-            level += 1
-          }
-          coeffs += ((level, 0, buf(0))) // the final average
           val k = args.getOrElse("wavelet_coeff", "16").toInt
-          val top = coeffs.result().sortBy { case (_, _, c) => -math.abs(c) }
-            .take(k)
-          import spark.implicits._
-          val coeffDf = top.toDF("level", "pos", "coeff")
-          if (wavelet == "only")
-            TaskResult(JobStatus.Completed, df = Some(coeffDf))
-          else {
+          // (level, pos, coeff): level 0 = finest details, the final
+          // smooth at the top level
+          val levels = 31 - Integer.numberOfLeadingZeros(n2)
+          val coeffs: Seq[(Int, Int, Double)] =
+            if (family != "haar") {
+              // orthonormal DWT families (db4, ...): the shared kernel
+              val fw = graft.functions.Wavelet.forward(data, family)
+              (0 until levels).flatMap { l =>
+                val base = n2 >> (l + 1)
+                (0 until base).map(p => (l, p, fw(base + p)))
+              } :+ ((levels, 0, fw(0)))
+            } else {
+              // Haar with pairwise averages and half-differences
+              val out = Seq.newBuilder[(Int, Int, Double)]
+              var avg = data.toSeq
+              for (l <- 0 until levels) {
+                val pairs = avg.grouped(2).toSeq
+                out ++= pairs.indices.map(p =>
+                  (l, p, (pairs(p)(0) - pairs(p)(1)) / 2))
+                avg = pairs.map(pr => (pr(0) + pr(1)) / 2)
+              }
+              (out += ((levels, 0, avg.head))).result()
+            }
+          val top = coeffs.sortBy { case (_, _, c) => -math.abs(c) }.take(k)
+          // the series reconstructed from only the retained coefficients
+          val rec =
+            if (family != "haar") {
+              val kept = new Array[Double](n2)
+              top.foreach { case (l, p, c) =>
+                kept(if (l == levels) 0 else (n2 >> (l + 1)) + p) = c
+              }
+              graft.functions.Wavelet.inverse(kept, family)
+            } else {
+              val kept = top.map { case (l, p, c) => (l, p) -> c }.toMap
+                .withDefaultValue(0.0)
+              (levels - 1 to 0 by -1).foldLeft(Array(kept((levels, 0)))) {
+                (a, l) => a.indices.flatMap(p =>
+                  Seq(a(p) + kept((l, p)), a(p) - kept((l, p)))).toArray
+              }
+            }
+          val coeffGrid = localGrid(Seq("level", "pos", "coeff"),
+            Seq("int", "int", "double"),
+            top.map { case (l, p, c) => Seq[Any](l, p, c) })
+          if (wavelet == "only") answer(coeffGrid)
+          else
             // wavelet=yes: main object = the DENOISED series
             // (explorenc_wavelet_data) reconstructed from only the
             // retained top-k coefficients; the coefficient grid rides
             // along as explorenc_wavelet_coeff
-            val kept = top.toSet
-            val rec = new Array[Double](n2)
-            rec(0) = if (kept.exists(c => c._1 == level && c._2 == 0))
-              buf(0) else 0.0
-            var l = level - 1
-            var width = 1
-            while (l >= 0) {
-              // expand averages one level down, applying kept details
-              val next = new Array[Double](width * 2)
-              var p = 0
-              while (p < width) {
-                val d = if (kept.exists(c => c._1 == l && c._2 == p))
-                  buf(width + p) else 0.0
-                next(2 * p) = rec(p) + d
-                next(2 * p + 1) = rec(p) - d
-                p += 1
-              }
-              // buf layout after the transform: level-l details live at
-              // [width, 2*width) only for the FINAL state of that
-              // region — recover them from the recorded coeff list
-              // instead (kept filter above already does)
-              System.arraycopy(next, 0, rec, 0, width * 2)
-              l -= 1
-              width *= 2
-            }
-            val recDf = rec.take(series.length).zipWithIndex
-              .map { case (v, i) => (i + 1, series(i), v) }.toSeq
-              .toDF("idx", "value", "denoised")
-            TaskResult(JobStatus.Completed, df = Some(recDf),
-              aux = Seq(graft.core.Grid("explorenc_wavelet_coeff",
-                "Wavelet Coefficients",
-                keys = Seq("LEVEL", "POS", "COEFF"),
-                fieldTypes = Seq("int", "int", "double"),
-                values = top.map { case (l2, p2, c2) =>
-                  Seq(l2.toString, p2.toString, c2.toString) })))
-          }
-        } else TaskResult(JobStatus.Completed, df = Some(raw.describe()))
+            answer(localGrid(Seq("idx", "value", "denoised"),
+              Seq("int", "double", "double"),
+              series.indices.map(i => Seq[Any](i + 1, series(i), rec(i)))),
+              aux = Seq(coeffGrid.copy(objkey = "explorenc_wavelet_coeff",
+                title = "Wavelet Coefficients",
+                keys = coeffGrid.keys.map(_.toUpperCase))))
+        } else answer(frameGrid(raw.describe()))
 
       case "oph_inspectfrag" =>
         // dump one fragment (= Spark partition): a single-partition
@@ -2609,7 +2562,7 @@ final class Engine(
       case "oph_showgrid" =>
         // dimension grids of a cube: names, kinds, sizes
         val (_, c) = needCube()
-        TaskResult(JobStatus.Completed, df = Some(CubeOps.cubeschema(spark, c)))
+        answer(schemaGrid(c))
 
       case "oph_hierarchy" =>
         // concept hierarchies driving aggregate2/reduce2 level exprs
@@ -2779,13 +2732,8 @@ final class Engine(
           case graft.server.SessionService.ResumedDocument(doc) =>
             TaskResult(JobStatus.Completed, message = doc)
           case graft.server.SessionService.ResumedListing(cols, rows) =>
-            import org.apache.spark.sql.types.{StructType, StructField, StringType}
-            val schema = StructType(cols.map(StructField(_, StringType)))
-            val df = spark.createDataFrame(
-              java.util.Arrays.asList(rows.map(r =>
-                org.apache.spark.sql.Row(r: _*)): _*), schema)
-            TaskResult(JobStatus.Completed, df = Some(df),
-              message = s"${rows.size} job(s)")
+            answer(localGrid(cols, cols.map(_ => "string"), rows))
+              .copy(message = s"${rows.size} job(s)")
         } catch {
           case e: ArgSpecs.ArgError => throw new Engine.EngineError(e.getMessage)
         }
@@ -2806,7 +2754,7 @@ final class Engine(
                 .replaceAll("[^A-Za-z0-9_]", "_"))
           }
         }
-        TaskResult(JobStatus.Completed, df = Some(spark.sql(query)))
+        answer(frameGrid(spark.sql(query)))
 
       case "oph_service" =>
         TaskResult(JobStatus.Completed, message = "status=up")

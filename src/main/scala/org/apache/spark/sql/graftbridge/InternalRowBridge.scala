@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, classic}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.{Limit, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Limit
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
@@ -37,10 +38,10 @@ object InternalRowBridge {
     * `QueryExecutionListener`s see it. The execution is a fresh
     * QueryExecution of `df`'s analyzed plan: `df`'s own is never
     * executed, so a long-lived frame does not pin an executed plan and
-    * its shuffle files. The rows come back as a local frame: collecting
-    * it starts no Spark job. */
+    * its shuffle files. The rows come back with their schema, decoded
+    * as `collect()` decodes them. */
   def headAndCount(df: DataFrame, n: Int, count: Boolean,
-      name: String): (DataFrame, Option[Long]) = {
+      name: String): (StructType, Seq[Row], Option[Long]) = {
     require(n >= 0, s"row limit must be non-negative, got $n")
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val plan = df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
@@ -67,7 +68,8 @@ object InternalRowBridge {
           Some(parts.iterator.map(_._2).sum))
       }
     }
-    (classic.Dataset.ofRows(spark,
-      LocalRelation(plan.output.map(_.newInstance()), rows)), total)
+    val toRow = ExpressionEncoder(RowEncoder.encoderFor(plan.schema))
+      .resolveAndBind().createDeserializer()
+    (plan.schema, rows.map(toRow), total)
   }
 }

@@ -105,10 +105,10 @@ class WaveletSpec extends SparkSpec {
       "src_path" -> tmp.getPath, "measure" -> "m", "dim" -> "idx",
       "wavelet" -> "yes", "wavelet_family" -> "db4",
       "wavelet_coeff" -> "16"))
-    val rows = res.df.get.orderBy("idx").collect()
+    val rows = res.grid.get.values.sortBy(_(0).toInt)
     assert(rows.length == 16)
     rows.foreach { r =>
-      assert(math.abs(r.getDouble(1) - r.getDouble(2)) < 1e-9,
+      assert(math.abs(r(1).toDouble - r(2).toDouble) < 1e-9,
         s"denoised with ALL coeffs kept must equal the input: $r")
     }
     // top-k coeff grid rides along

@@ -93,4 +93,26 @@ class ResponseWriterSpec extends SparkSpec {
     assert(nl.get(1).get(0).get("node").asText == "2")
     assert(nl.get(2).size == 0)
   }
+
+  test("read inverts render for every task answer object") {
+    val objs = Seq(
+      TextObj("explorecube_summary", "Summary", "rows: 3; \"q\"\n\u0001"),
+      Grid("peek", "peek", Seq("k", "v"), Seq("long", "string"),
+        Seq(Seq("1", "null"), Seq("2", "a|b"))),
+      Grid("empty", "empty", Seq("k"), Seq("long"), Seq.empty),
+      TreeObj("fs", "Folder Tree", None, 0, Seq("path"),
+        Seq(GraphNode(Seq("/")), GraphNode(Seq("/a")), GraphNode(Seq("/a/b"))),
+        Seq(GraphLink(0, 1, ""), GraphLink(1, 2, ""))),
+      TreeObj("t", "T", Some("d"), 1, Seq("n"),
+        Seq(GraphNode(Seq("x")), GraphNode(Seq("y"))),
+        Seq(GraphLink(1, 0, "up"))))
+    objs.foreach { o =>
+      val back = ResponseWriter.read(mapper.readTree(ResponseWriter.render(o)))
+      assert(back == o)
+    }
+    val graph = GraphObj("g", "G", directed = true, Seq("n"),
+      Seq(GraphNode(Seq("x"))), Seq.empty)
+    intercept[IllegalArgumentException](
+      ResponseWriter.read(mapper.readTree(ResponseWriter.render(graph))))
+  }
 }

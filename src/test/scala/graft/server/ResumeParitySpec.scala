@@ -71,10 +71,8 @@ class ResumeParitySpec extends SparkSpec with BeforeAndAfterAll {
     }.toMap
     try {
       val r = eng.runDataOperator("oph_resume", args)
-      r.df match {
-        case Some(df) => Listing(df.schema.fieldNames.toSeq,
-          df.collect().toSeq.map(row =>
-            (0 until row.length).map(row.getString)))
+      r.grid match {
+        case Some(g) => Listing(g.keys, g.values)
         case None => Doc(r.message)
       }
     } catch {

@@ -83,7 +83,7 @@ class SessionServiceSpec extends AnyFunSuite {
     // the reference default (id=0) is the session job LISTING
     val listed = e.runDataOperator("oph_resume",
       Map("document_type" -> "response"))
-    assert(listed.df.get.count() == 1)
+    assert(listed.grid.get.values.size == 1)
     val req = e.runDataOperator("oph_resume",
       Map("document_type" -> "request", "id" -> "1"))
     assert(req.message.contains("wf"))

@@ -86,11 +86,12 @@ class EngineFixesSpec extends SparkSpec {
     val e = engine()
     val pid = e.runDataOperator("oph_randcube",
       Map("nrows" -> "6", "array_length" -> "4", "container" -> "c")).cubePid.get
-    val size = e.runDataOperator("oph_cubesize", Map("cube" -> pid)).df.get
-    assert(size.columns.toSeq == Seq("n_rows", "n_elements", "est_bytes"))
-    assert(size.as[(Long, Long, Long)].head() == ((6L, 24L, 192L)))
-    val el = e.runDataOperator("oph_cubeelements", Map("cube" -> pid)).df.get
-    assert(el.as[Long].head() == 24L)
+    val size = e.runDataOperator("oph_cubesize", Map("cube" -> pid)).grid.get
+    assert(size.keys == Seq("n_rows", "n_elements", "est_bytes"))
+    assert(size.fieldTypes == Seq("long", "long", "long"))
+    assert(size.values == Seq(Seq("6", "24", "192")))
+    val el = e.runDataOperator("oph_cubeelements", Map("cube" -> pid)).grid.get
+    assert(el.values == Seq(Seq("24")))
   }
 
   test("mergecubes keeps dim arrays aligned; flatten after concat works") {

@@ -74,10 +74,10 @@ class EngineOpsSpec extends SparkSpec {
     val r = e.runDataOperator("oph_explorecube", Map(
       "cube" -> imp.cubePid.get, "subset_dims" -> "l_linenumber",
       "subset_filter" -> "2:3", "limit_filter" -> "5"))
-    val rows = r.df.get.collect()
-    assert(rows.length == 5)
-    assert(rows.forall { row =>
-      val ln = row.getInt(row.fieldIndex("l_linenumber"))
+    val g = r.grid.get
+    assert(g.values.length == 5)
+    assert(g.values.forall { row =>
+      val ln = row(g.keys.indexOf("l_linenumber")).toInt
       ln >= 2 && ln <= 3
     })
   }
@@ -91,8 +91,11 @@ class EngineOpsSpec extends SparkSpec {
     val r = e.runDataOperator("oph_explorecube", Map(
       "cube" -> imp.cubePid.get, "subset_dims" -> "l_linenumber",
       "subset_filter" -> "1", "limit_filter" -> "10"))
-    val sizes = r.df.get.selectExpr("size(l_quantity)").collect().map(_.getInt(0))
-    assert(sizes.nonEmpty && sizes.forall(_ <= 1))
+    // an array cell renders as ArraySeq(v1, v2, ...)
+    val g = r.grid.get
+    val cells = g.values.map(_(g.keys.indexOf("l_quantity")))
+    assert(cells.nonEmpty && cells.forall(c =>
+      c.startsWith("ArraySeq(") && !c.contains(",")))
     // coord subset on an explicit dim
     val flat = e.runDataOperator("oph_importnc", Map(
       "src_path" -> sf("lineitem"), "measure" -> "l_quantity",
@@ -101,13 +104,14 @@ class EngineOpsSpec extends SparkSpec {
       "cube" -> flat.cubePid.get, "subset_dims" -> "l_orderkey",
       "subset_type" -> "coord", "subset_filter" -> "1:50",
       "limit_filter" -> "1000"))
-    val keys = rc.df.get.select("l_orderkey").collect().map(_.getLong(0))
+    val gc = rc.grid.get
+    val keys = gc.values.map(_(gc.keys.indexOf("l_orderkey")).toLong)
     assert(keys.nonEmpty && keys.forall(k => k >= 1 && k <= 50))
     // dims without a filter = 'all', not an error
     val all = e.runDataOperator("oph_explorecube", Map(
       "cube" -> flat.cubePid.get, "subset_dims" -> "l_orderkey",
       "limit_filter" -> "5"))
-    assert(all.df.get.count() == 5)
+    assert(all.grid.get.values.size == 5)
   }
 
   test("oph_sql runs SQL over registered cube views") {
@@ -118,19 +122,19 @@ class EngineOpsSpec extends SparkSpec {
     val id = imp.cubePid.get.split("/").last
     val r = e.runDataOperator("oph_sql", Map(
       "query" -> s"SELECT count(*) AS n, round(sum(l_quantity), 2) AS s FROM c$id"))
-    val row = r.df.get.collect()(0)
-    assert(row.getLong(0) > 0)
+    val row = r.grid.get.values.head
+    assert(row(0).toLong > 0)
     // the container_measure alias view works too
     val r2 = e.runDataOperator("oph_sql", Map(
       "query" -> "SELECT max(l_orderkey) AS m FROM li_l_quantity"))
-    assert(r2.df.get.collect()(0).getLong(0) > 0)
+    assert(r2.grid.get.values.head.head.toLong > 0)
     intercept[Engine.EngineError](e.runDataOperator("oph_sql", Map.empty))
   }
 
   test("explorenc describes a raw source") {
     val e = engine()
     val r = e.runDataOperator("oph_explorenc", Map("src_path" -> sf("region")))
-    val stats = r.df.get.collect().map(_.getString(0)).toSet
+    val stats = r.grid.get.values.map(_.head).toSet
     assert(stats.contains("mean") && stats.contains("max"))
   }
 

@@ -112,7 +112,7 @@ class EngineRound3Spec extends SparkSpec {
       ]}"""))
     assert(res("schema").status == JobStatus.Completed)
     // output 0 is a.parquet (sorted fan-out): 30 elements, not 10
-    val n = res("schema").df.get.collect()(0).getLong(0)
+    val n = res("schema").grid.get.values.head.head.toLong
     assert(n == 30L, s"expected the FIRST fan-out output, got $n elements")
   }
 

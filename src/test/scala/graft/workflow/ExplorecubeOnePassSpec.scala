@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -16,12 +15,12 @@ import graft.core.{Catalog, Grid, JobStatus, ResponseObject, TextObj}
 
 /**
  * oph_explorecube answers from one Spark execution: the shown rows and
- * (at level>=2) the total come from one pass, and the task's frame is
- * local, so rendering the response runs no Spark job.
+ * (at level>=2) the total come from one pass, and the task's answer is
+ * a built grid, so rendering the response runs no Spark job.
  *
  * Parity rows compare the rendered response byte for byte with a
- * reference built the two-query way: `sub.count()` for the summary and a
- * lazy `sub.limit(limit_filter)` frame that the renderer collects.
+ * reference built the two-query way: `sub.count()` for the summary and
+ * the grid of a `sub.limit(limit_filter)` frame.
  */
 class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -72,8 +71,9 @@ class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
             .map(r => Option(r.get(0)).map(_.toString).getOrElse("null"))
             .mkString("|"))
         })
-    Engine.TaskResult(JobStatus.Completed, df = Some(sub.df.limit(limit)),
-      aux = aux.result())
+    Engine.TaskResult(JobStatus.Completed, grid = Some(
+      graft.render.ResponseWriter.gridOf("ref", "ref", sub.df.limit(limit),
+        gridCap)), aux = aux.result())
   }
 
   private def explore(e: Engine, pid: String,
@@ -188,7 +188,7 @@ class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val e = engine()
     val r = explore(e, lineitem(e, imp = false),
       Map("limit_filter" -> "1000", "level" -> "2"))
-    val held = r.df.get.collect().length
+    val held = r.grid.get.values.length
     assert(held == gridCap)
   }
 
@@ -204,28 +204,6 @@ class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   // --------------------------------------------------------- job counts
-
-  /** Spark jobs per job group, with a barrier: a marker job's start is
-    * delivered after every event posted before it. */
-  private final class JobCounter extends SparkListener {
-    val groups = new ConcurrentLinkedQueue[String]()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      groups.add(Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse(""))
-    def jobsIn(group: String): Int = {
-      val marker = s"marker-${System.nanoTime}"
-      val sc = spark.sparkContext
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.currentTimeMillis + 30000
-      while (!groups.contains(marker) && System.currentTimeMillis < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(marker), "listener barrier timed out")
-      groups.asScala.count(_ == group)
-    }
-  }
 
   /** Captures the QueryExecutions the session's listeners see. */
   private final class QeCapture extends QueryExecutionListener {
@@ -261,13 +239,11 @@ class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val probe = subCube.df.select(subCube.df.columns.map(subCube.df(_)): _*)
     probe.collect()
     val stages = shuffleStages(probe.queryExecution.executedPlan)
-    val jobs = new JobCounter
-    spark.sparkContext.addSparkListener(jobs)
-    try {
+    JobCounter.around(spark) { jobs =>
       val sc = spark.sparkContext
       sc.setJobGroup("explore-pass", "explore-pass")
       val r = try explore(e, pid, passArgs) finally sc.clearJobGroup()
-      val explored = jobs.jobsIn("explore-pass")
+      val explored = jobs.jobsIn(_ == "explore-pass")
       assert(explored >= 1)
       assert(explored <= stages + 1, s"$explored jobs for $stages shuffle stages")
 
@@ -275,8 +251,8 @@ class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val out = try e.renderResponse("wf", Map("peek" -> r))
       finally sc.clearJobGroup()
       assert(gridRows(out, "peek").size == 50)
-      assert(jobs.jobsIn("explore-render") == 0)
-    } finally spark.sparkContext.removeSparkListener(jobs)
+      assert(jobs.jobsIn(_ == "explore-render") == 0)
+    }
   }
 
   test("a QueryExecutionListener sees the explore pass") {
@@ -299,7 +275,7 @@ class ExplorecubeOnePassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val stored = e.cube(pid).get
     // no subset arguments: the operator explores the stored frame itself
     val r = explore(e, pid, Map("limit_filter" -> "10", "level" -> "2"))
-    val shown = r.df.get.collect().length
+    val shown = r.grid.get.values.length
     assert(shown == 10)
     // an executed plan would pin its final adaptive plan and shuffle
     // files for as long as the cube stays in the store; the stored

@@ -21,17 +21,17 @@ class ExplorencModesSpec extends SparkSpec {
       "src_path" -> sf("lineitem"), "measure" -> "l_quantity",
       "show_stats" -> "101000011")) // mean, std, max, range
     assert(r.status == JobStatus.Completed)
-    val row = r.df.get.head()
-    assert(r.df.get.columns.toSeq == Seq("mean", "std", "max", "range"))
+    val row = r.grid.get.values.head.map(_.toDouble)
+    assert(r.grid.get.keys == Seq("mean", "std", "max", "range"))
     val direct = spark.read.parquet(sf("lineitem"))
       .agg(avg(col("l_quantity")), stddev_samp(col("l_quantity")),
         max(col("l_quantity")).cast("double"),
         (max(col("l_quantity")) - min(col("l_quantity"))).cast("double"))
       .head()
-    assert(math.abs(row.getDouble(0) - direct.getDouble(0)) < 1e-9)
-    assert(math.abs(row.getDouble(1) - direct.getDouble(1)) < 1e-9)
-    assert(row.getDouble(2) == direct.getDouble(2))
-    assert(row.getDouble(3) == direct.getDouble(3))
+    assert(math.abs(row(0) - direct.getDouble(0)) < 1e-9)
+    assert(math.abs(row(1) - direct.getDouble(1)) < 1e-9)
+    assert(row(2) == direct.getDouble(2))
+    assert(row(3) == direct.getDouble(3))
   }
 
   test("show_fit returns the least-squares line of measure over dim") {
@@ -46,9 +46,9 @@ class ExplorencModesSpec extends SparkSpec {
       "src_path" -> p, "measure" -> "y", "dim" -> "t",
       "show_fit" -> "yes"))
     assert(r.status == JobStatus.Completed)
-    val row = r.df.get.head()
-    assert(math.abs(row.getDouble(2) - 3.0) < 1e-9, "slope")
-    assert(math.abs(row.getDouble(3) - 2.0) < 1e-9, "intercept")
+    val row = r.grid.get.values.head
+    assert(math.abs(row(2).toDouble - 3.0) < 1e-9, "slope")
+    assert(math.abs(row(3).toDouble - 2.0) < 1e-9, "intercept")
   }
 
   test("wavelet=only emits the Haar coefficients of the ordered series") {
@@ -63,8 +63,8 @@ class ExplorencModesSpec extends SparkSpec {
       "src_path" -> p, "measure" -> "y", "dim" -> "t",
       "wavelet" -> "only", "wavelet_coeff" -> "4"))
     assert(r.status == JobStatus.Completed)
-    val got = r.df.get.collect()
-      .map(x => (x.getInt(0), x.getInt(1), x.getDouble(2))).toSet
+    val got = r.grid.get.values
+      .map(x => (x(0).toInt, x(1).toInt, x(2).toDouble)).toSet
     // level0 details -0.5,-0.5; level1 detail -1.0; final average 2.5
     assert(got == Set((0, 0, -0.5), (0, 1, -0.5), (1, 0, -1.0), (2, 0, 2.5)))
 
@@ -73,16 +73,16 @@ class ExplorencModesSpec extends SparkSpec {
     val full = e.runDataOperator("oph_explorenc", Map(
       "src_path" -> p, "measure" -> "y", "dim" -> "t",
       "wavelet" -> "yes", "wavelet_coeff" -> "4"))
-    val rows = full.df.get.orderBy("idx").collect()
-      .map(x => (x.getInt(0), x.getDouble(1), x.getDouble(2)))
+    val rows = full.grid.get.values.sortBy(_(0).toInt)
+      .map(x => (x(0).toInt, x(1).toDouble, x(2).toDouble))
     assert(rows.map(_._3).toSeq == Seq(1.0, 2.0, 3.0, 4.0),
       "full coefficient set must reconstruct the series")
     assert(full.aux.exists(_.objkey == "explorenc_wavelet_coeff"))
     val flat = e.runDataOperator("oph_explorenc", Map(
       "src_path" -> p, "measure" -> "y", "dim" -> "t",
       "wavelet" -> "yes", "wavelet_coeff" -> "1"))
-    assert(flat.df.get.orderBy("idx").collect()
-      .map(_.getDouble(2)).toSeq == Seq(2.5, 2.5, 2.5, 2.5),
+    assert(flat.grid.get.values.sortBy(_(0).toInt)
+      .map(_(2).toDouble) == Seq(2.5, 2.5, 2.5, 2.5),
       "keeping only the average must denoise to the mean")
   }
 
@@ -270,7 +270,7 @@ class ExplorencModesSpec extends SparkSpec {
       ]}"""))
     assert(res("pick").status == JobStatus.Completed)
     // filter 2:3 keeps (b, c); output_order 1 = c -> 40 elements
-    val n = res("pick").df.get.collect()(0).getLong(0)
+    val n = res("pick").grid.get.values.head.head.toLong
     assert(n == 40L, s"filter+output_order must index the FILTERED list, got $n")
 
     // a filter selecting nothing errors loudly

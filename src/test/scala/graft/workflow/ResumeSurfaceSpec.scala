@@ -46,16 +46,14 @@ class ResumeSurfaceSpec extends SparkSpec {
     eng.runDataOperator("oph_resume", args.toMap)
 
   private def rows(r: Engine.TaskResult): Seq[Map[String, String]] = {
-    val df = r.df.get
-    val cols = df.schema.fieldNames.toSeq
-    df.collect().toSeq.map(row =>
-      cols.zipWithIndex.map { case (c, i) => c -> row.getString(i) }.toMap)
+    val g = r.grid.get
+    g.values.map(row => g.keys.zip(row).toMap)
   }
 
   test("default listing: one row per workflow with EXIT STATUS") {
     val r = resume()
     val rs = rows(r)
-    assert(r.df.get.schema.fieldNames.toSeq == Seq("OPH JOB ID",
+    assert(r.grid.get.keys == Seq("OPH JOB ID",
       "SESSION CODE", "WORKFLOW ID", "MARKER ID", "CREATION DATE",
       "EXIT STATUS"))
     assert(rs.map(_("WORKFLOW ID")) == Seq("1", "2"))
@@ -139,7 +137,7 @@ class ResumeSurfaceSpec extends SparkSpec {
 
   test("level 5 lists both documents per marker") {
     val r = resume("level" -> "5")
-    val cols = r.df.get.schema.fieldNames.toSeq
+    val cols = r.grid.get.keys
     assert(cols.contains("COMMAND") && cols.contains("EXIT STATUS"))
   }
 
@@ -184,9 +182,8 @@ class ResumeSurfaceSpec extends SparkSpec {
     assert(e2.runDataOperator("oph_resume", Map(
       "id" -> "1", "id_type" -> "marker",
       "document_type" -> "response")).message == firstDoc)
-    val markers = e2.runDataOperator("oph_resume", Map(
-      "id_type" -> "marker", "level" -> "3")).df.get
-      .select("MARKER ID").collect().map(_.getString(0).toInt).toSeq
+    val markers = rows(e2.runDataOperator("oph_resume", Map(
+      "id_type" -> "marker", "level" -> "3"))).map(_("MARKER ID").toInt)
     assert(markers.distinct.size == markers.size,
       s"marker ids collide across the restart: $markers")
     assert(markers.max > markers.min)
@@ -206,17 +203,16 @@ class ResumeSurfaceSpec extends SparkSpec {
          "arguments": ["nrows=2", "array_length=2", "container=c"]}
       ]}"""), requestJson = None, submitter = Some("bob"))
     def listing(args: (String, String)*) =
-      e.runDataOperator("oph_resume",
-        (args :+ ("document_type" -> "request")).toMap).df.get
-        .select("COMMAND").collect().map(_.getString(0)).toSeq
+      rows(e.runDataOperator("oph_resume",
+        (args :+ ("document_type" -> "request")).toMap)).map(_("COMMAND"))
     assert(listing().size == 2)
     assert(listing("user" -> "alice") == Seq("mine"))
     assert(listing("user" -> "bob") == Seq("theirs"))
     assert(listing("user" -> "nobody").isEmpty)
     // marker listings filter by submitter too
-    val m = e.runDataOperator("oph_resume", Map("id_type" -> "marker",
-      "level" -> "3", "user" -> "alice")).df.get.collect()
-    assert(m.forall(_.getString(2) == "1")) // only workflow 1's markers
+    val m = rows(e.runDataOperator("oph_resume", Map("id_type" -> "marker",
+      "level" -> "3", "user" -> "alice")))
+    assert(m.forall(_("WORKFLOW ID") == "1")) // only workflow 1's markers
   }
 
   test("saved task records survive the session state file") {
