@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.expressions.{MovingAvg, PolyHash}
+import graft.plans.{AsofJoinStrategy, ParamLiteralStrategy}
 
 /**
  * SparkSessionExtensions entry point: registers the engine's native
@@ -13,6 +14,8 @@ import graft.functions.expressions.{MovingAvg, PolyHash}
  *
  *   spark.sql("SELECT graft_moving_avg(arr, 3) FROM t")
  *   spark.sql("SELECT graft_poly_hash(text) FROM docs")
+ *
+ * and the engine's planner strategies (see [[GraftExtensions.install]]).
  *
  * Enable with
  *   .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -23,7 +26,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // whole-operator extension: the native as-of join strategy
     // (graft.plans.AsofJoin -> AsofJoinExec)
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
+    // request values reach generated code as parameters
+    ext.injectPlannerStrategy(ParamLiteralStrategy(_))
   }
 }
 
@@ -69,6 +74,20 @@ object GraftExtensions {
           org.apache.spark.sql.catalyst.expressions.Cast(args(0), dbl),
           org.apache.spark.sql.catalyst.expressions.Cast(args(1), dbl))
       }))
+
+  /** Install the planner strategies on an EXISTING session, which
+    * was built without `spark.sql.extensions` (or `getOrCreate` ignored
+    * `withExtensions`). Idempotent: a strategy the session's planner
+    * already has, injected or installed, is not added again. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.experimental.synchronized {
+      val present = spark.sessionState.planner.strategies.map(_.getClass)
+      val missing = Seq(AsofJoinStrategy, ParamLiteralStrategy(spark))
+        .filterNot(s => present.contains(s.getClass))
+      if (missing.nonEmpty)
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies ++ missing
+    }
 
   /** Register into an EXISTING session (getOrCreate ignores
     * withExtensions once a session exists). */

@@ -108,11 +108,7 @@ object Joins {
       leftTime: String, rightTime: String, payload: Seq[String],
       strict: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    // idempotent per-session registration (also available through
-    // GraftExtensions for spark.sql.extensions users)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
+    graft.GraftExtensions.install(spark)
     val leftCols = left.columns.toSeq
     val matchedTime = s"matched_$rightTime"
     // non-orderable payloads (maps) would silently fall out of the

@@ -196,6 +196,10 @@ final class Engine(
 
   import Engine._
 
+  // the engine's planner strategies, on sessions built without
+  // spark.sql.extensions (the server's and the benchmark's)
+  graft.GraftExtensions.install(spark)
+
   /** Data-plane store: PID -> materialized cube (concurrent: parallel
     * oph_for branches register cubes simultaneously). */
   private val cubes = scala.collection.concurrent.TrieMap[String, Cube]()
@@ -242,8 +246,6 @@ final class Engine(
         case None =>
       }
     }
-  private def isPinned(pid: String): Boolean =
-    cubePins.synchronized(cubePins.contains(pid))
 
   /** Per-thread pin hook active while a workflow task executes, so
     * register() can pin a cube AT BIRTH — before its own evictExcess
@@ -353,19 +355,21 @@ final class Engine(
 
   private def evictExcess(): Unit =
     if (cubes.size > cubeCap) cubeAccess.synchronized {
-      var exhausted = false
-      while (cubes.size > cubeCap && !exhausted) {
-        // victims come from the UNPINNED cubes only: evicting a pinned
-        // one would fail an admitted workflow's next dependency lookup
-        val candidates = cubes.keysIterator.filterNot(isPinned).toSeq
-        if (candidates.isEmpty) exhausted = true
-        else {
-          val victim = candidates.minBy(p => cubeAccess.getOrElse(p, 0L))
-          dropCube(victim)
+      // victims come from the UNPINNED cubes only: evicting a pinned
+      // one would fail an admitted workflow's next dependency lookup.
+      // One pin snapshot per pass, taken AFTER reading the store's
+      // keys: register() pins a cube before inserting it, so every
+      // listed cube that is pinned is pinned in the snapshot
+      val resident = cubes.keys.toSeq
+      val pinned = cubePins.synchronized(cubePins.keySet.toSet)
+      var candidates = resident.filterNot(pinned)
+      while (cubes.size > cubeCap && candidates.nonEmpty) {
+        val victim = candidates.minBy(p => cubeAccess.getOrElse(p, 0L))
+        candidates = candidates.filterNot(_ == victim)
+        if (dropCube(victim))
           sessions.log(s"cube $victim evicted (store cap $cubeCap)")
-        }
       }
-      if (exhausted)
+      if (cubes.size > cubeCap && candidates.isEmpty)
         sessions.log(s"cube store over cap $cubeCap: every resident " +
           "cube is pinned by a running workflow (soft-cap breach)")
     }
