@@ -84,7 +84,8 @@ final class AuthService(now: () => Long = () => System.currentTimeMillis,
   // split limit -1 keeps trailing empty fields: a P line whose cdd is
   // empty must still parse as 8 fields, or the user's enabled/quota
   // state silently reverts to defaults on restart.
-  stateFile.flatMap(StateStore.load).foreach { text =>
+  stateFile.filter(java.nio.file.Files.isRegularFile(_))
+    .map(java.nio.file.Files.readString).foreach { text =>
     text.linesIterator.foreach(_.split("\t", -1) match {
       case Array("U", name, h) => users(name) = h
       case Array("T", token, user) => tokens(token) = user

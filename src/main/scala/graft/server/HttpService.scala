@@ -99,9 +99,9 @@ final class HttpService(
     poolSize: Int = HttpService.DefaultPoolSize,
     /** Durable per-session state directory: each routed session's
       * role table + saved documents persist as `session-<code>.json`
-      * and are restored after a restart (ownership included — a
-      * restarted server must not hand someone else's session to the
-      * first requester). None = memory only. */
+      * (a [[StateStore.Log]]) and are restored after a restart
+      * (ownership included — a restarted server must not hand someone
+      * else's session to the first requester). None = memory only. */
     stateDir: Option[java.nio.file.Path] = None,
     /** TLS materials (reference `src/ssl/oph_server.c` serves SOAP
       * over SSL) — when set, the service speaks HTTPS only and a
@@ -221,31 +221,16 @@ final class HttpService(
     stateDir.map(_.resolve(s"session-$code.json"))
 
   /** Persisted sessions owned by `user` that have NO live engine:
-    * (code, state file, autoremove && sole-session — i.e. reapable by
-    * deleting the file). Format knowledge lives in
-    * [[SessionService.persistedSessionInfo]], next to the writer. */
+    * (code, state file, autoremove), read by the session service's own
+    * replay; an unreadable file counts for nobody and is logged. */
   private def persistedOwnedBy(
       user: String): Seq[(String, java.nio.file.Path, Boolean)] =
-    stateDir.toSeq.flatMap { d =>
-      val stream = java.nio.file.Files.list(d)
-      try {
-        val it = stream.iterator()
-        val buf =
-          Seq.newBuilder[(String, java.nio.file.Path, Boolean)]
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (n.startsWith("session-") && n.endsWith(".json")) {
-            val c = n.stripPrefix("session-").stripSuffix(".json")
-            if (!sessionEngines.contains(c))
-              SessionService.persistedSessionInfo(p, c).foreach { info =>
-                if (info.owner == user)
-                  buf += ((c, p, info.autoremove && info.soleSession))
-              }
-          }
-        }
-        buf.result()
-      } finally stream.close()
+    stateDir.toSeq.flatMap(d => Option(d.toFile.listFiles).toSeq.flatten).flatMap { f =>
+      val c = f.getName.stripPrefix("session-").stripSuffix(".json")
+      try Option.when(f.getName == s"session-$c.json" && !sessionEngines.contains(c))(
+          new SessionService(Some(f.toPath))).filter(_.ownerOf(c).contains(user))
+        .map(s => (c, f.toPath, s.autoremoveEnabled(c)))
+      catch { case e: Exception => engine.sessions.log(e.getMessage); None }
     }
 
   private def engineFor(code: String, user: String,
@@ -533,9 +518,7 @@ final class HttpService(
               // same guards as reapSessions: never the primary engine,
               // never an engine mid-workflow — the quota reaper must not
               // clear cubes under a run's feet or detach the primary.
-              // purge's own persist handles the state file (deletes it
-              // when empty, rewrites it when siblings remain — an
-              // explicit delete here would destroy those siblings)
+              // purge logs the removal (a file left empty is deleted)
               if ((e ne engine) && e.runningCount == 0 &&
                   e.sessions.autoremoveEnabled(c) &&
                   lastUsed.getOrElse(c, 0L) < cutoff) {
@@ -547,18 +530,17 @@ final class HttpService(
           }
           // persisted-but-unrouted expired sessions reap too — else a
           // restart could lock the user at the cap forever. The file's
-          // mtime stands in for last access; delete only sole-session
-          // autoremove files (a shared file's siblings must survive),
-          // and only under mintLock with a live re-check — engineFor
-          // restores under the same lock, so the delete cannot race a
-          // concurrent restore of the same code
+          // mtime stands in for last access; the file's own service
+          // purges the session (a shared file's siblings survive), under
+          // mintLock with a live re-check — engineFor restores under the
+          // same lock, so the purge cannot race a concurrent restore
           persisted0.foreach { case (c, p, reapable) =>
             val mtime =
               try java.nio.file.Files.getLastModifiedTime(p).toMillis
               catch { case _: Exception => Long.MaxValue }
             if (reapable && mtime < cutoff) mintLock.synchronized {
               if (!sessionEngines.contains(c)) {
-                java.nio.file.Files.deleteIfExists(p)
+                new SessionService(Some(p)).purge(c)
                 engine.sessions.log(
                   s"session $c reaped (user quota, expired on disk)")
               }

@@ -117,6 +117,13 @@ object SessionService {
       roles: mutable.Map[String, Int] = mutable.Map.empty,
       workflows: mutable.ArrayBuffer[SavedWorkflow] = mutable.ArrayBuffer.empty)
 
+  /** One line of a session log: a session header (create, setenv,
+    * grant, revoke), one saved workflow, or a removal. */
+  final case class Record(session: String, header: Option[Header] = None,
+      workflow: Option[SavedWorkflow] = None, removed: Boolean = false)
+  final case class Header(owner: String, label: String, active: Boolean,
+      autoremove: Boolean, roles: Map[String, Int], nextCode: Int)
+
   final class AuthError(msg: String) extends Exception(msg)
 
   /** What an oph_resume request answers: one saved document, or a job
@@ -125,37 +132,13 @@ object SessionService {
   final case class ResumedDocument(document: String) extends Resumed
   final case class ResumedListing(columns: Seq[String],
       rows: Seq[Seq[String]]) extends Resumed
-
-  /** What a quota gate needs to know about one session inside a
-    * persisted state file, WITHOUT instantiating a service: its owner,
-    * its autoremove flag, and whether it is the file's only session
-    * (deleting the file is then safe). Owned here so the reader lives
-    * next to `persist()`'s writer — format drift cannot silently
-    * diverge in another module. Unreadable/foreign files yield None. */
-  final case class PersistedInfo(owner: String, autoremove: Boolean,
-      soleSession: Boolean)
-
-  def persistedSessionInfo(p: java.nio.file.Path,
-      code: String): Option[PersistedInfo] =
-    try {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(p))
-      var found: Option[PersistedInfo] = None
-      var count = 0
-      Option(n.get("sessions")).foreach(_.elements().forEachRemaining { sn =>
-        count += 1
-        if (sn.get("code").asText == code)
-          found = Some(PersistedInfo(sn.get("owner").asText,
-            Option(sn.get("autoremove")).exists(_.asBoolean), false))
-      })
-      found.map(_.copy(soleSession = count == 1))
-    } catch { case _: Exception => None }
 }
 
 final class SessionService(
     /** Durable session table (the reference persists sessions in
       * OphidiaDB): codes, owners, roles, flags and saved workflow
-      * documents survive a restart. None = memory only. */
+      * documents survive a restart in a [[StateStore.Log]] of one
+      * [[SessionService.Record]] per change. None = memory only. */
     stateFile: Option[java.nio.file.Path] = None) {
   import SessionService._
 
@@ -164,61 +147,40 @@ final class SessionService(
   private val maxLog = 1000
   private var nextCode = 0
 
+  private val stateLog = stateFile.map(new StateStore.Log(_))
+
   // restore persisted sessions (the log ring is intentionally volatile)
-  stateFile.flatMap(StateStore.load).foreach { text =>
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    nextCode = Option(n.get("nextCode")).map(_.asInt).getOrElse(0)
-    Option(n.get("sessions")).foreach(_.elements().forEachRemaining { sn =>
-      val s = Session(
-        sn.get("code").asText, sn.get("owner").asText,
-        sn.get("label").asText, sn.get("active").asBoolean,
-        sn.get("autoremove").asBoolean)
-      Option(sn.get("roles")).foreach(_.properties().forEach(e =>
-        s.roles(e.getKey) = e.getValue.asInt))
-      Option(sn.get("workflows")).foreach(_.elements().forEachRemaining { w =>
-        val tasks = Option(w.get("tasks")).map { tn =>
-          val buf = mutable.ArrayBuffer.empty[SavedTask]
-          tn.elements().forEachRemaining(t => buf += SavedTask(
-            t.get("marker").asInt, t.get("name").asText,
-            t.get("status").asText, t.get("command").asText,
-            t.get("response").asText,
-            Option(t.get("light")).exists(_.asBoolean)))
-          buf.toSeq
-        }.getOrElse(Nil)
-        s.workflows += SavedWorkflow(w.get("id").asInt,
-          w.get("request").asText, w.get("response").asText,
-          Option(w.get("parentMarker")).map(_.asInt).getOrElse(0), tasks,
-          Option(w.get("created")).map(_.asText).getOrElse(""),
-          Option(w.get("submitter")).map(_.asText).getOrElse(""))
-      })
-      sessions(s.code) = s
-    })
+  stateLog.foreach(_.replay(decode).foreach(_()))
+
+  private def headerOf(s: Session) = Record(s.code, header = Some(Header(
+    s.owner, s.label, s.active, s.autoremove, s.roles.toMap, nextCode)))
+
+  /** One log line back into the change it records. */
+  private def decode(n: com.fasterxml.jackson.databind.JsonNode): () => Unit = {
+    val r = StateStore.mapper.treeToValue(n, classOf[Record])
+    (r.header, r.workflow, r.removed) match {
+      case (Some(h), None, false) => () => {
+        val s = sessions.getOrElseUpdate(r.session, Session(r.session, h.owner))
+        s.label = h.label; s.active = h.active; s.autoremove = h.autoremove
+        s.roles.clear(); s.roles ++= h.roles
+        nextCode = h.nextCode
+      }
+      case (None, Some(w), false) =>
+        () => sessions.get(r.session).foreach(_.workflows += w)
+      case (None, None, true) => () => sessions.remove(r.session)
+      case _ => throw new IllegalArgumentException("not one session change")
+    }
   }
 
-  private def persist(): Unit = stateFile.foreach { p =>
-    // an empty table DELETES the file: a lingering empty state file
-    // would still read as "restorable" to the HTTP layer, letting a
-    // later requester re-mint (and own) a removed session's code
-    if (sessions.isEmpty) { StateStore.delete(p); return }
-    def q(s: String): String = graft.render.ResponseWriter.jsonQuote(s)
-    val body = sessions.values.map { s =>
-      val roles = s.roles.map { case (u, m) => s"${q(u)}:$m" }.mkString(",")
-      val wfs = s.workflows.map { w =>
-        val ts = w.tasks.map(t =>
-          s"""{"marker":${t.markerId},"name":${q(t.name)},""" +
-            s""""status":${q(t.status)},"command":${q(t.command)},""" +
-            s""""response":${q(t.response)},"light":${t.light}}""")
-          .mkString(",")
-        s"""{"id":${w.workflowId},"request":${q(w.request)},""" +
-          s""""response":${q(w.response)},""" +
-          s""""parentMarker":${w.parentMarker},"created":${q(w.created)},""" +
-          s""""submitter":${q(w.submitter)},"tasks":[$ts]}"""
-      }.mkString(",")
-      s"""{"code":${q(s.code)},"owner":${q(s.owner)},"label":${q(s.label)},""" +
-        s""""active":${s.active},"autoremove":${s.autoremove},""" +
-        s""""roles":{$roles},"workflows":[$wfs]}"""
-    }.mkString(",")
-    StateStore.save(p, s"""{"nextCode":$nextCode,"sessions":[$body]}""")
+  /** Log one change. An empty table deletes the file: the HTTP layer
+    * reads an existing file as "restorable", so a lingering one would
+    * let a later requester re-mint (and own) a removed session's code. */
+  private def persist(record: Record): Unit = stateLog.foreach { store =>
+    def line(r: Record) = StateStore.mapper.writeValueAsString(r)
+    if (sessions.isEmpty) store.delete()
+    else store.append(line(record), sessions.values.map(1 + _.workflows.size).sum)(
+      sessions.values.flatMap(s => (headerOf(s) +:
+        s.workflows.map(w => Record(s.code, workflow = Some(w)))).map(line)))
   }
 
   // ------------------------------------------------------------- log
@@ -267,7 +229,7 @@ final class SessionService(
     val s = Session(c, owner, label)
     sessions(s.code) = s
     log(s"session ${s.code} created by $owner")
-    persist()
+    persist(headerOf(s))
     s
   }
 
@@ -307,7 +269,7 @@ final class SessionService(
         case other => throw new IllegalArgumentException(s"unknown key '$other'")
       }
       log(s"session $code setenv $key=$value by $user")
-      persist()
+      persist(headerOf(s))
     }
 
   /** action=grant / revoke (admin-or-owner only). */
@@ -318,7 +280,7 @@ final class SessionService(
       require_(target != s.owner, "owner role is immutable")
       s.roles(target) = parseRole(role)
       log(s"session $code grant $target=$role by $user")
-      persist()
+      persist(headerOf(s))
     }
 
   def revoke(code: String, user: String, target: String): Unit = synchronized {
@@ -326,7 +288,7 @@ final class SessionService(
     require_((roleOf(s, user) & RoleAdmin) != 0, s"$user cannot revoke on $code")
     s.roles.remove(target)
     log(s"session $code revoke $target by $user")
-    persist()
+    persist(headerOf(s))
   }
 
   /** action=disable / enable / remove (owner only for remove). */
@@ -339,7 +301,7 @@ final class SessionService(
   private[server] def purge(code: String): Unit = synchronized {
     sessions.remove(code)
     log(s"session $code purged (autoremove)")
-    persist()
+    persist(Record(code, removed = true))
   }
 
   def remove(code: String, user: String): Unit = synchronized {
@@ -348,7 +310,7 @@ final class SessionService(
     require_(!s.active, "disable the session before removing it")
     sessions.remove(code)
     log(s"session $code removed by $user")
-    persist()
+    persist(Record(code, removed = true))
   }
 
   private def get(code: String): Session =
@@ -372,7 +334,7 @@ final class SessionService(
           s.workflows += SavedWorkflow(id, request, response,
             parentMarker, tasks, created, submitter)
           log(s"session $code workflow $id saved")
-          persist()
+          persist(Record(code, workflow = Some(s.workflows.last)))
           id
         case None =>
           // the workflow itself may have removed its own session

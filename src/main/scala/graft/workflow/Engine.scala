@@ -1,5 +1,6 @@
 package graft.workflow
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.InternalRowBridge
@@ -61,8 +62,17 @@ object Engine {
     * HTTP layer can answer 429 instead of a generic 500. */
   final class QueueFullError(msg: String) extends Exception(msg)
 
+  private final case class RecordedRun(spec: Workflow.Spec,
+      results: Map[String, TaskResult], request: Option[String])
+  /** One line of the run log; answers are rendered response objects. */
+  final case class RunRecord(request: String, results: Seq[TaskRecord])
+  final case class TaskRecord(task: String, status: String,
+      cubePid: Option[String], message: String, grid: Option[JsonNode],
+      aux: Seq[JsonNode])
+  private def mapper = graft.server.StateStore.mapper
+
   /** Checkpoint-store bound: at most this many workflow names keep a
-    * replayable last run (arbitrary entries beyond it age out). */
+    * replayable last run (the run recorded longest ago ages out). */
   val MaxLastRuns = 64
 
   /** Per-engine job-group nonce source (see `jobGroupOf`). */
@@ -181,12 +191,13 @@ final class Engine(
     maxCubes: Int = 0,
     /** Durable session-table file (roles, flags, saved workflow
       * documents survive a restart — the reference's OphidiaDB session
-      * persistence). None = memory only. */
+      * persistence), a [[graft.server.StateStore.Log]]. None = memory only. */
     sessionStateFile: Option[java.nio.file.Path] = None,
     /** Durable workflow-run store — the reference's `oph_workflow_save`
       * (`src/oph_workflow_engine.c:244-288`): each completed-or-aborted
       * run's request document and every task's result (status, output
-      * pids and its answer: message, grid and aux objects) persist, so
+      * pids and its answer: message, grid and aux objects) persist as
+      * one appended record of a [[graft.server.StateStore.Log]], so
       * a RESTARTED server honors `checkpoint` requests and a replayed
       * task renders exactly as it did. Cubes do not survive a restart,
       * so entries whose cubes are gone re-execute and re-create the
@@ -557,74 +568,47 @@ final class Engine(
     sessions.log(s"cancel ($ctype) requested for workflow $wfId")
   }
 
-  /** Last completed run per workflow name — the store the request-level
-    * `checkpoint` field resumes from. */
-  private val lastRuns = scala.collection.concurrent.TrieMap[
-    String, (Workflow.Spec, Map[String, TaskResult])]()
+  /** Last completed run per workflow name, oldest first — the store the
+    * request-level `checkpoint` field resumes from. A run is remembered,
+    * evicted and logged under its lock; one without its request text
+    * (what the log keeps) lives in memory only. */
+  private val lastRuns =
+    scala.collection.mutable.LinkedHashMap[String, RecordedRun]()
+  private val runLog = runStateFile.map(new graft.server.StateStore.Log(_))
 
-  /** Raw request documents of recorded runs (what persists — the spec
-    * re-parses from them on restart). */
-  private val lastRunJson =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  private def persistRuns(): Unit = runStateFile.foreach { p =>
-    def q(s: String): String = ResponseWriter.jsonQuote(s)
-    val runs = lastRuns.toSeq.flatMap { case (name, (_, results)) =>
-      lastRunJson.get(name).map { js =>
-        val rs = results.map { case (k, r) =>
-          s"""{"task":${q(k)},"status":${q(r.status.toString)},""" +
-            s""""cubePid":${r.cubePid.map(q).getOrElse("null")},""" +
-            s""""message":${q(r.message)},""" +
-            s""""grid":${r.grid.map(ResponseWriter.render).getOrElse("null")},""" +
-            s""""aux":[${r.aux.map(ResponseWriter.render).mkString(",")}]}"""
-        }.mkString(",")
-        s"""{"request":$js,"results":[$rs]}"""
-      }
-    }
-    graft.server.StateStore.save(p, s"""{"runs":[${runs.mkString(",")}]}""")
+  /** Make `run` the newest entry, evicting the oldest past MaxLastRuns;
+    * replay does the same, so a restart restores the live store. */
+  private def remember(run: RecordedRun): Unit = {
+    lastRuns.remove(run.spec.name)
+    lastRuns(run.spec.name) = run
+    while (lastRuns.size > Engine.MaxLastRuns) lastRuns.remove(lastRuns.head._1)
   }
 
-  // restore recorded runs (torn/old-format state must never block
-  // startup — a run that fails to parse is simply not resumable)
-  runStateFile.flatMap(graft.server.StateStore.load).foreach { text =>
-    import scala.jdk.CollectionConverters._
-    try {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      Option(n.get("runs")).foreach { arr =>
-        arr.asScala.foreach { run =>
-          try {
-            val reqJson = run.get("request").toString
-            val spec = Workflow.parse(reqJson)
-            // a run saved without its answers (an older format) throws
-            // here and is not resumable: its grid tasks would replay as
-            // text
-            lastRuns(spec.name) = (spec, run.get("results").asScala.map { r =>
-              r.get("task").asText -> TaskResult(
-                JobStatus.withName(r.get("status").asText),
-                cubePid = Option(r.get("cubePid")).filterNot(_.isNull)
-                  .map(_.asText),
-                grid = Option(r.get("grid")).filterNot(_.isNull)
-                  .map(g => ResponseWriter.read(g).asInstanceOf[Grid]),
-                message = r.get("message").asText,
-                aux = r.get("aux").asScala.map(ResponseWriter.read).toSeq)
-            }.toMap)
-            lastRunJson(spec.name) = reqJson
-          } catch {
-            case e: Exception =>
-              System.err.println(
-                s"[graft] run-store: skipping unparseable run entry in " +
-                  s"${runStateFile.getOrElse("?")} (${e.getClass.getSimpleName}: ${e.getMessage}) " +
-                  "— that workflow will not be checkpoint-resumable")
-          }
-        }
-      }
-    } catch {
-      case e: Exception =>
-        System.err.println(
-          s"[graft] run-store: failed to parse ${runStateFile.getOrElse("?")} " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}) — checkpoint resume unavailable")
-    }
+  private def runRecord(request: String, results: Map[String, TaskResult]) = {
+    def node(o: ResponseObject) = mapper.readTree(ResponseWriter.render(o))
+    mapper.writeValueAsString(RunRecord(request, results.toSeq.map {
+      case (k, r) => TaskRecord(k, r.status.toString, r.cubePid, r.message,
+        r.grid.map(node), r.aux.map(node)) }))
   }
+
+  private def recordRun(run: RecordedRun): Unit = lastRuns.synchronized {
+    remember(run)
+    for (log <- runLog; request <- run.request)
+      log.append(runRecord(request, run.results), lastRuns.size)(
+        lastRuns.values.flatMap(r => r.request.map(runRecord(_, r.results))))
+  }
+
+  runLog.foreach(_.replay { n =>
+    val r = mapper.treeToValue(n, classOf[RunRecord])
+    RecordedRun(Workflow.parse(r.request), r.results.map(t => t.task ->
+      TaskResult(JobStatus.withName(t.status), t.cubePid,
+        t.grid.map(ResponseWriter.read(_).asInstanceOf[Grid]), t.message,
+        aux = t.aux.map(ResponseWriter.read))).toMap, Some(r.request))
+  }.foreach(remember))
+
+  /** The recorded runs, oldest first: (workflow name, task results). */
+  private[graft] def recordedRuns = lastRuns.synchronized(
+    lastRuns.values.map(r => r.spec.name -> r.results).toSeq)
 
   /** Request entry honoring `checkpoint` (`oph_workflow_parsing.c:
     * 283-290`): any non-empty value resumes from the last recorded run
@@ -634,9 +618,11 @@ final class Engine(
       requestJson: Option[String] = None,
       presetId: Option[Int] = None,
       submitter: Option[String] = None): Map[String, TaskResult] =
-    spec.checkpoint.filter(_.nonEmpty).flatMap(_ => lastRuns.get(spec.name)) match {
-      case Some((priorSpec, prior)) =>
-        runFrom(spec, priorSpec, prior, requestJson, presetId, submitter)
+    spec.checkpoint.filter(_.nonEmpty)
+      .flatMap(_ => lastRuns.synchronized(lastRuns.get(spec.name))) match {
+      case Some(prior) =>
+        runFrom(spec, prior.spec, prior.results, requestJson, presetId,
+          submitter)
       case None => run(spec, requestJson, presetId = presetId,
         submitter = submitter)
     }
@@ -1274,17 +1260,8 @@ final class Engine(
           submitter.getOrElse(user))
       }
       // record for request-level checkpoint resume (the ORIGINAL spec:
-      // runFrom compares task definitions against the next request).
-      // Results are data (answers are built grids, capped in size), so
-      // they are kept as they are; the map itself is bounded
-      lastRuns(spec0.name) = (spec0, results.toMap)
-      if (lastRuns.size > Engine.MaxLastRuns)
-        lastRuns.keys.filter(_ != spec0.name)
-          .take(lastRuns.size - Engine.MaxLastRuns).foreach { k =>
-            lastRuns.remove(k); lastRunJson.remove(k)
-          }
-      requestJson.foreach(js => lastRunJson(spec0.name) = js)
-      persistRuns()
+      // runFrom compares task definitions against the next request)
+      recordRun(RecordedRun(spec0, results.toMap, requestJson))
     }
     results.toMap
   }

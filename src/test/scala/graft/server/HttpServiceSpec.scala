@@ -383,6 +383,50 @@ class HttpServiceSpec extends SparkSpec {
     } finally svc.stop()
   }
 
+  test("a restarted service counts an unrouted persisted session against " +
+      "max_sessions and reaps it on disk once expired") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_quota_state")
+    var now = System.currentTimeMillis()
+    def serve(): HttpService = {
+      val auth = new AuthService
+      auth.addUser("graft", "secret")
+      auth.addUser("carol", "pw")
+      auth.setUserProps("carol",
+        AuthService.UserProps(maxSessions = 1, timeoutSessionDays = 1))
+      new HttpService(new Engine(spark, new Catalog("sess")), auth,
+        nowMillis = () => now, stateDir = Some(dir)).start()
+    }
+    val cred = Some(basic("carol", "pw"))
+    def execute(svc: HttpService, body: String): Int =
+      http(s"http://127.0.0.1:${svc.boundPort}/services/execute", "POST",
+        Some(body), cred)._1
+    def wf(sess: String) = s"""{
+      "name": "q", "sessionid": "$sess", "exec_mode": "sync",
+      "tasks": [{"name": "s", "operator": "oph_set",
+        "arguments": ["key=a", "value=1"]}]}"""
+    val svc1 = serve()
+    try {
+      assert(execute(svc1, wf("d1")) == 200)
+      assert(execute(svc1, """{
+        "name": "mk_auto", "sessionid": "d1", "exec_mode": "sync",
+        "tasks": [{"name": "m", "operator": "oph_manage_session",
+          "arguments": ["action=setenv", "key=autoremove",
+            "value=yes"]}]}""") == 200)
+    } finally svc1.stop()
+    val file = dir.resolve("session-d1.json")
+    assert(java.nio.file.Files.isRegularFile(file))
+
+    // a new lifetime: d1 has no engine here, yet it fills carol's quota
+    val svc2 = serve()
+    try {
+      assert(execute(svc2, wf("d2")) == 429)
+      // past timeout_session the expired autoremove file is reaped
+      now += 2L * 86400000L
+      assert(execute(svc2, wf("d2")) == 200)
+      assert(!java.nio.file.Files.exists(file))
+    } finally svc2.stop()
+  }
+
   test("sessionid routes requests to per-session engines with ownership") {
     withService { (_, base, defaultEngine) =>
       val inSession = workflowAggRequest.replace("\"name\": \"wf_http\",",
