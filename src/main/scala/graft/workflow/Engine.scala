@@ -78,6 +78,11 @@ object Engine {
   /** Per-engine job-group nonce source (see `jobGroupOf`). */
   private val nonceSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Marker source for materialised import rows (see `materialise`):
+    * unique per JVM, so no two imports ever share a cached plan. */
+  private val importSeq = new java.util.concurrent.atomic.AtomicLong(0)
+  private val ImportMarker = "__graft_import"
+
   /** One shared HTTP client for remote-drop transfers: per-call
     * construction leaks a selector thread each time. Redirects are
     * NOT auto-followed — the JDK client re-sends caller-set headers on
@@ -233,10 +238,24 @@ final class Engine(
     else spark.conf.getOption("spark.graft.cubeStoreMax")
       .flatMap(_.toIntOption).getOrElse(4096)
   private val cubeTick = new java.util.concurrent.atomic.AtomicLong(0)
+  /** pid -> its latest access tick, and the same stamps ordered by
+    * tick (tick -> pid): eviction walks the oldest end of the index
+    * instead of scanning the store. A re-stamp removes the pid's old
+    * index entry; an entry whose tick is no longer its pid's latest
+    * (two racing stamps of one pid) is stale and eviction drops it. */
   private val cubeAccess = scala.collection.concurrent.TrieMap[String, Long]()
+  private val accessOrder =
+    new java.util.concurrent.ConcurrentSkipListMap[Long, String]()
 
-  private def touchCube(pid: String): Unit =
-    cubeAccess(pid) = cubeTick.incrementAndGet()
+  private def touchCube(pid: String): Unit = {
+    val tick = cubeTick.incrementAndGet()
+    // the map first, then the index: an index entry never runs ahead
+    // of the stamp that makes it current, so eviction cannot take a
+    // fresh entry for a stale one
+    val old = cubeAccess.put(pid, tick)
+    accessOrder.put(tick, pid)
+    old.foreach(t => accessOrder.remove(t))
+  }
 
   /** Cubes pinned by in-flight workflow runs, refcounted by PID. A
     * pinned cube is exempt from LRU eviction: with the store at cap
@@ -246,38 +265,35 @@ final class Engine(
     * storm-soak race). run() pins each task's output cubes as they
     * complete and unpins them all in its finally, re-trimming to cap,
     * so the cap is soft only while every resident cube is live. */
-  private val cubePins = scala.collection.mutable.HashMap[String, Int]()
+  private val cubePins =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def pinCube(pid: String): Unit =
-    cubePins.synchronized { cubePins(pid) = cubePins.getOrElse(pid, 0) + 1 }
+    cubePins.merge(pid, 1, (a, b) => a + b)
   private def unpinCube(pid: String): Unit =
-    cubePins.synchronized {
-      cubePins.get(pid) match {
-        case Some(n) if n > 1 => cubePins(pid) = n - 1
-        case Some(_) => cubePins.remove(pid)
-        case None =>
-      }
-    }
+    cubePins.computeIfPresent(pid, (_, n) => if (n > 1) n - 1 else null)
 
-  /** Per-thread pin hook active while a workflow task executes, so
-    * register() can pin a cube AT BIRTH — before its own evictExcess
-    * runs. Pinning only after runDataOperator returns leaves a window
-    * where the just-registered cube is the sole unpinned resident and
-    * eviction pressure lands exactly on it (the storm soak hit this:
-    * with every older cube pinned by live runs, the next register's
-    * eviction evicted the newborn). runDataOperator runs synchronously
-    * on the task's thread, including massive/importncs recursion, so a
-    * ThreadLocal set around the call covers every register beneath it. */
-  private val runPinContext = new ThreadLocal[String => Unit]()
+  /** Per-thread run hooks active while a workflow task executes.
+    * `pin` lets register() pin a cube AT BIRTH — before its own
+    * evictExcess runs. Pinning only after runDataOperator returns
+    * leaves a window where the just-registered cube is the sole
+    * unpinned resident and eviction pressure lands exactly on it (the
+    * storm soak hit this: with every older cube pinned by live runs,
+    * the next register's eviction evicted the newborn). `hold` hands
+    * the run data the task persisted, which the run releases when it
+    * ends. runDataOperator runs synchronously on the task's thread,
+    * including massive/importncs recursion, so a ThreadLocal set
+    * around the call covers every register beneath it. */
+  private final class RunHooks(val pin: String => Unit,
+      val hold: DataFrame => Unit)
+  private val runHooks = new ThreadLocal[RunHooks]()
 
-  /** Remove one cube from the store, releasing any cached blocks its
-    * plan holds. Single exit point for oph_delete, on_exit actions and
-    * LRU eviction. */
+  /** Remove one cube from the store. Single exit point for oph_delete,
+    * on_exit actions and LRU eviction. No store cube is persisted (an
+    * import's materialised rows belong to its run, which releases
+    * them), so there are no blocks to release here. */
   def dropCube(pid: String): Boolean = {
-    cubeAccess.remove(pid)
-    cubes.remove(pid) match {
-      case Some(c) => c.df.unpersist(blocking = false); true
-      case None => false
-    }
+    cubeAccess.remove(pid).foreach(t => accessOrder.remove(t))
+    cubes.remove(pid).isDefined
   }
 
   /** Release the whole store (session close / engine eviction). */
@@ -364,23 +380,26 @@ final class Engine(
   /** Number of live (non-evicted) cubes — soak tests assert the bound. */
   def cubeCount: Int = cubes.size
 
+  private val evictLock = new Object
+
   private def evictExcess(): Unit =
-    if (cubes.size > cubeCap) cubeAccess.synchronized {
-      // victims come from the UNPINNED cubes only: evicting a pinned
-      // one would fail an admitted workflow's next dependency lookup.
-      // One pin snapshot per pass, taken AFTER reading the store's
-      // keys: register() pins a cube before inserting it, so every
-      // listed cube that is pinned is pinned in the snapshot
-      val resident = cubes.keys.toSeq
-      val pinned = cubePins.synchronized(cubePins.keySet.toSet)
-      var candidates = resident.filterNot(pinned)
-      while (cubes.size > cubeCap && candidates.nonEmpty) {
-        val victim = candidates.minBy(p => cubeAccess.getOrElse(p, 0L))
-        candidates = candidates.filterNot(_ == victim)
-        if (dropCube(victim))
-          sessions.log(s"cube $victim evicted (store cap $cubeCap)")
+    if (cubes.size > cubeCap) evictLock.synchronized {
+      // walk the access index from its oldest end. Victims come from
+      // the UNPINNED cubes only: evicting a pinned one would fail an
+      // admitted workflow's next dependency lookup. Each candidate's
+      // pin state is read AFTER its residency: register() stamps and
+      // pins a cube before inserting it, so a resident newborn always
+      // reads as pinned
+      val it = accessOrder.entrySet.iterator
+      while (cubes.size > cubeCap && it.hasNext) {
+        val e = it.next()
+        val pid = e.getValue
+        if (!cubeAccess.get(pid).contains(e.getKey)) it.remove() // stale
+        else if (cubes.contains(pid) && !cubePins.containsKey(pid) &&
+            dropCube(pid))
+          sessions.log(s"cube $pid evicted (store cap $cubeCap)")
       }
-      if (cubes.size > cubeCap && candidates.isEmpty)
+      if (cubes.size > cubeCap)
         sessions.log(s"cube store over cap $cubeCap: every resident " +
           "cube is pinned by a running workflow (soft-cap breach)")
     }
@@ -467,14 +486,14 @@ final class Engine(
       c.desc.metadata, parents, sourceTask)
     val pid = e.pid(catalog)
     // stamp BEFORE inserting: a concurrent evictExcess must never see
-    // the new pid without an access tick (tickless reads as coldest and
-    // the just-registered cube would be the eviction victim)
+    // the new pid without an access tick (a tickless resident has no
+    // entry in the access index, so it could never be evicted)
     touchCube(pid)
     // born pinned when a workflow task is executing on this thread —
-    // see runPinContext. The pin lands BEFORE the store insert so no
+    // see runHooks. The pin lands BEFORE the store insert so no
     // concurrent evictExcess can ever observe the newborn unpinned
     // (pinning a not-yet-resident pid is harmless)
-    Option(runPinContext.get()).foreach(_(pid))
+    Option(runHooks.get()).foreach(_.pin(pid))
     cubes(pid) = c
     evictExcess()
     pid
@@ -796,6 +815,10 @@ final class Engine(
     val runPins = scala.collection.concurrent.TrieMap[String, Unit]()
     def pinForRun(p: String): Unit =
       if (runPins.putIfAbsent(p, ()).isEmpty) pinCube(p)
+    // source rows this run's imports materialised: released by the
+    // finally below, whatever way the run ends
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val hooks = new RunHooks(pinForRun, held.add(_))
 
     /** Execute tasks[from..until); returns a control signal:
       * 0 = normal, 1 = break (consumed by the nearest enclosing loop),
@@ -873,8 +896,10 @@ final class Engine(
         }
       }
 
-      /** Run data task `t` on its substituted arguments. */
-      def execute(t: Workflow.Task, args0: Map[String, String]): TaskResult = {
+      /** Run data task `t` on its substituted arguments; `readers`
+        * task instances read its output cube. */
+      def execute(t: Workflow.Task, args0: Map[String, String],
+          readers: Int): TaskResult = {
         // request-level cdd is each task's default data directory
         // (`oph_workflow_parsing.c:91-95`): relative src_path /
         // output_path values resolve against it in the operator
@@ -912,9 +937,9 @@ final class Engine(
         val maxAttempts = if (t.onError == "repeat") 3 else 1
         def attempt(n: Int): TaskResult =
           try {
-            runPinContext.set(pinForRun)
-            try withTaskPermit(runDataOperator(t.operator, withCube))
-            finally runPinContext.remove()
+            runHooks.set(hooks)
+            try withTaskPermit(runDataOperator(t.operator, withCube, readers))
+            finally runHooks.remove()
           } catch {
             case e: Exception if n < maxAttempts =>
               sessions.log(
@@ -1158,7 +1183,8 @@ final class Engine(
               // verified to still exist) instead of re-executing
               val r =
                 if (!t.run) TaskResult(JobStatus.Skipped)
-                else checkpointSkip.getOrElse(name, execute(t, args0))
+                else checkpointSkip.getOrElse(name,
+                  execute(t, args0, readersOf(spec, i, sub)))
               results(name) = r
               // massive fan-outs carry every produced pid in `outputs`;
               // pin them all — any can be a later dep
@@ -1212,6 +1238,9 @@ final class Engine(
       // held the store over cap (soft-cap breach) while the run lived
       runPins.keysIterator.foreach(unpinCube)
       evictExcess()
+      // release the source rows this run materialised: every cube
+      // derived from them keeps its lineage and re-reads the source
+      held.forEach(_.unpersist(blocking = false))
       // a cancel flag dies with its run — workflow ids are never
       // reused, but a leaked entry would still grow the map unbounded
       cancelFlags.remove(wfId)
@@ -1444,6 +1473,33 @@ final class Engine(
     }
   }
 
+  /** How many task instances read task `i`'s output cube: each
+    * dependant counts once per iteration of every oph_for that encloses
+    * it but not task `i`. A loop whose length is not known before it
+    * runs (a file listing, or values from a variable not yet set)
+    * counts once. */
+  private def readersOf(spec: Workflow.Spec, i: Int,
+      sub: String => String): Int = {
+    val name = spec.tasks(i).name
+    val loops = spec.tasks.indices
+      .filter(k => spec.tasks(k).operator.equalsIgnoreCase("oph_for"))
+      .map(k => (k, matching(spec, k, "oph_for", "oph_endfor")))
+    def encloses(loop: (Int, Int), j: Int) = loop._1 < j && j < loop._2
+    def length(k: Int): Long = {
+      val args = spec.tasks(k).arguments
+      scala.util.Try(args.get("values").map(v => sub(v).split('|').length.toLong)
+        .orElse(args.get("counter").map(c => Subset.parse(sub(c)).count))
+        .getOrElse(1L)).getOrElse(1L)
+    }
+    val total = spec.tasks.indices
+      .filter(j => spec.tasks(j).run &&
+        spec.tasks(j).dependencies.exists(_.task == name))
+      .map(j => loops.filter(l => encloses(l, j) && !encloses(l, i))
+        .map(l => length(l._1)).product)
+      .sum
+    math.min(total, Int.MaxValue.toLong).toInt
+  }
+
   /** Index of the matching closer for the opener at `start`. */
   private def matching(spec: Workflow.Spec, start: Int,
       opener: String, closer: String): Int = {
@@ -1486,12 +1542,38 @@ final class Engine(
     case _ => p
   }
 
+  /** Persist the source rows an import's cube needs (`cols`),
+    * hash-partitioned on its explicit dims, with one eager job on the
+    * calling thread (the run's job group), and hand them to the run,
+    * which unpersists them when it ends. A marker column naming this
+    * import makes the persisted plan unique: Spark's CacheManager
+    * matches cached data by plan equality, so no other import (another
+    * run's, or one after the file was rewritten) can read these rows,
+    * and their release frees nothing else. `persist`, not a local
+    * checkpoint: every derived cube keeps its lineage and recomputes
+    * from the source after the release. */
+  private def materialise(raw: DataFrame, exp: Seq[String],
+      cols: Seq[String], source: String, hooks: RunHooks): DataFrame = {
+    val picked = raw.select(cols.distinct.map(col): _*).withColumn(
+      ImportMarker, lit(s"$source#${importSeq.incrementAndGet()}"))
+    val rows =
+      (if (exp.isEmpty) picked else picked.repartition(exp.map(col): _*))
+        .persist()
+    // held before the job runs: a failed or cancelled job still releases
+    hooks.hold(rows)
+    rows.count()
+    rows
+  }
+
   /** The Tier-C dispatch: operator name -> Spark execution. A massive
     * `cube=[...]` argument fans the task out over EVERY matching cube
     * (one light task per match, `oph_workflow_engine.c:1002-1057`);
     * `run=no` returns the match list without executing
-    * (engine.c:1058-1065). */
-  def runDataOperator(operator: String, args: Map[String, String]): TaskResult = {
+    * (engine.c:1058-1065). `readers` is how many task instances of the
+    * calling run read the output cube: an import read by two or more
+    * materialises its source rows (see `materialise`). */
+  def runDataOperator(operator: String, args: Map[String, String],
+      readers: Int = 1): TaskResult = {
     val op = operator.toLowerCase
 
     // a grid-returning operator's answer: its grid, built here (the
@@ -1654,7 +1736,12 @@ final class Engine(
               }
             }
           }
-        val built = CubeOps.buildN(timeConverted, measure, exp, imp,
+        // a cube that two or more task instances of this run read is
+        // built over its source rows read once, in this task
+        val rows = Option(runHooks.get()).filter(_ => readers > 1)
+          .fold(timeConverted)(h =>
+            materialise(timeConverted, exp, exp ++ imp :+ measure, path, h))
+        val built = CubeOps.buildN(rows, measure, exp, imp,
           args.getOrElse("container", "container"), path)
         // subset at import (reference importnc subset_dims/subset_filter/
         // subset_type args): same semantics as a follow-up oph_subset,

@@ -87,6 +87,71 @@ class CubeEvictionSpec extends SparkSpec {
     assert(e.cubeCount <= 2, s"store not re-trimmed: ${e.cubeCount}")
   }
 
+  test("at the cap, eviction follows access order") {
+    val e = engine(cap = 4)
+    val Seq(a, b, c, d) = (1 to 4).map(i => e.register(smallCube(i), "c"))
+    Seq(c, a, d, b).foreach(p => assert(e.cube(p).isDefined)) // c coldest
+    val n1 = e.register(smallCube(5), "c")
+    assert(e.cube(c).isEmpty && e.cubeCount == 4)
+    val n2 = e.register(smallCube(6), "c")
+    assert(e.cube(a).isEmpty && e.cubeCount == 4)
+    Seq(d, b, n1, n2).foreach(p => assert(e.cube(p).isDefined))
+  }
+
+  test("at the cap, a cube pinned by a running workflow survives") {
+    // the wait's sleeper registers past the cap while the run lives:
+    // mk is the coldest cube but pinned, so the newer ones go instead
+    var e: Engine = null
+    var seen = Seq.empty[(Int, Boolean)]
+    e = new Engine(spark, new Catalog("sess"), maxCubes = 3, sleeper = _ => {
+      val mk = e.catalog.allCubes.head.pid(e.catalog)
+      (1 to 5).foreach(i => e.register(smallCube(i), "c"))
+      seen = Seq((e.cubeCount, e.cube(mk).isDefined))
+    })
+    val res = e.run(Workflow.parse("""{
+      "name": "pin", "tasks": [
+        {"name": "mk", "operator": "oph_randcube",
+         "arguments": ["nrows=4", "array_length=2", "container=p", "seed=1"]},
+        {"name": "w", "operator": "oph_wait",
+         "arguments": ["type=clock", "timeout=1"]},
+        {"name": "red", "operator": "oph_reduce",
+         "arguments": ["operation=sum"], "dependencies": [{"task": "mk"}]}
+      ]}"""))
+    assert(res.values.forall(_.status == JobStatus.Completed),
+      res.map { case (k, r) => s"$k=${r.status}(${r.message})" })
+    assert(seen == Seq((3, true)))
+  }
+
+  test("8 threads registering at once leave the store at its cap " +
+      "with no pinned cube evicted") {
+    val e = engine(cap = 16)
+    // each run registers 6 cubes and then reads its first and third:
+    // an evicted pinned cube fails the reader with "unknown cube"
+    def wf(t: Int) = Workflow.parse(s"""{
+      "name": "storm$t", "tasks": [
+        ${(1 to 6).map(i => s"""{"name": "mk$i", "operator": "oph_randcube",
+          "arguments": ["nrows=4", "array_length=2", "container=s$t",
+            "seed=$i"]}""").mkString(",")},
+        {"name": "r1", "operator": "oph_reduce", "arguments": ["operation=sum"],
+         "dependencies": [{"task": "mk1"}]},
+        {"name": "r3", "operator": "oph_reduce", "arguments": ["operation=max"],
+         "dependencies": [{"task": "mk3"}]}
+      ]}""")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[
+      Map[String, Engine.TaskResult]]()
+    val threads = (1 to 8).map { t =>
+      val th = new Thread(() => { start.await(); results.add(e.run(wf(t))) })
+      th.start(); th
+    }
+    start.countDown()
+    threads.foreach(_.join(120000))
+    assert(results.size == 8)
+    results.forEach(res => assert(res.values.forall(_.status == JobStatus.Completed),
+      res.map { case (k, r) => s"$k=${r.status}(${r.message})" }))
+    assert(e.cubeCount == 16)
+  }
+
   test("a workflow soak stays bounded and still answers its live cubes") {
     val e = engine(cap = 8)
     (1 to 40).foreach { i =>
