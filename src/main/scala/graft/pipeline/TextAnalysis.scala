@@ -4,10 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 
+import graft.functions.expressions.TextScore
+
 /**
  * Text analysis for training-data pipelines: token counting, quality
- * scoring, language ID, and document fingerprinting. Everything is a
- * codegen'd builtin-function composition — per-row, no UDFs, no shuffle.
+ * scoring, language ID, and document fingerprinting. Per-row, no UDFs,
+ * no shuffle. The per-document scores are native expressions
+ * (`TextScore`) that stay in whole-stage codegen; the
+ * `filter`/`aggregate` lambdas that `gopherFilter` and `bm25` still use
+ * run interpreted.
  */
 object TextAnalysis {
 
@@ -17,9 +22,7 @@ object TextAnalysis {
   def tokensLower(text: Column): Column = split(lower(trim(text)), "\\s+")
 
   /** Whitespace token count; empty/blank text counts 0. */
-  def tokenCount(text: Column): Column =
-    when(trim(text) === "", 0)
-      .otherwise(size(split(trim(text), "\\s+"))).cast("long")
+  def tokenCount(text: Column): Column = score(text, TextScore.NTokens)
 
   /** A BPE-ish subword proxy: count of runs matching word pieces /
     * digits / punctuation (approximates tokenizer token counts without
@@ -36,47 +39,34 @@ object TextAnalysis {
         .cast("double") / length(text).cast("double"))
 
   /** Ratio of whitespace-separated tokens that are pure ASCII letters. */
-  def alphaTokenRatio(text: Column): Column = {
-    val toks = split(trim(text), "\\s+")
-    when(trim(text) === "", lit(0.0)).otherwise(
-      size(F.filter(toks, t => t.rlike("^[A-Za-z]+$"))).cast("double") /
-        size(toks).cast("double"))
-  }
+  def alphaTokenRatio(text: Column): Column = score(text, TextScore.AlphaRatio)
 
-  private val stopwords = Map(
+  private[graft] val stopwords = Map(
     "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "for"),
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "ein", "mit"),
     "fr" -> Seq("le", "la", "et", "les", "des", "est", "une", "dans"),
     "es" -> Seq("el", "la", "de", "que", "y", "en", "los", "una"))
 
+  /** One output of the native scoring kernel over the stopword table:
+    * the tokens are `split(trim(text), "\\s+")`, stopwords match them
+    * lowercased, and blank text scores 0 (see `TextScore`). */
+  private def score(text: Column, out: TextScore.Out): Column =
+    TextScore.text_score(text, out, stopwords.toSeq)
+
   /** Fraction of tokens that are stopwords of `lang` — the quality
     * signal ("natural prose has stopwords") and the language-ID score. */
-  def stopwordRatio(text: Column, lang: String): Column = {
-    val words = stopwords(lang)
-    val toks = tokensLower(text)
-    when(trim(text) === "", lit(0.0)).otherwise(
-      size(F.filter(toks, t => t.isin(words: _*))).cast("double") /
-        size(toks).cast("double"))
-  }
+  def stopwordRatio(text: Column, lang: String): Column =
+    score(text, TextScore.StopRatio(lang))
 
   /** Heuristic language ID: argmax of per-language stopword ratios,
     * 'und' (undetermined) when no stopwords hit at all. */
-  def langId(text: Column): Column = {
-    val scores = stopwords.keys.toSeq.sorted.map(l =>
-      struct(stopwordRatio(text, l).as("s"), lit(l).as("l")))
-    val best = array_max(array(scores: _*))
-    when(best.getField("s") > 0, best.getField("l")).otherwise("und")
-  }
+  def langId(text: Column): Column = score(text, TextScore.Lang)
 
   /** Composite quality score in [0,1]: rewards prose-like length,
-    * stopword presence and alpha tokens; penalizes punctuation soup. */
-  def qualityScore(text: Column): Column = {
-    val lenScore = least(length(text).cast("double") / 500.0, lit(1.0))
-    val stopScore = least(stopwordRatio(text, "en") * 4.0, lit(1.0))
-    val alphaScore = alphaTokenRatio(text)
-    val punctPenalty = greatest(lit(1.0) - punctRatio(text) * 5.0, lit(0.0))
-    round((lenScore + stopScore + alphaScore + punctPenalty) / 4.0, 4)
-  }
+    * stopword presence and alpha tokens; penalizes punctuation soup.
+    * round((min(chars/500, 1) + min(4 * stopwordRatio(en), 1) +
+    * alphaTokenRatio + max(1 - 5 * punctRatio, 0)) / 4, 4). */
+  def qualityScore(text: Column): Column = score(text, TextScore.Quality("en"))
 
   /** Deterministic document fingerprint: polynomial rolling hash of the
     * normalized (lowercased, whitespace-collapsed) text, base 31 mod
@@ -87,43 +77,16 @@ object TextAnalysis {
     graft.functions.expressions.GraftExpressions.poly_hash(
       regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** Token-staged document scoring: (id, text, lang, quality,
-    * n_tokens) with the token arrays computed ONCE as columns and
-    * every ratio derived from the attribute. Arithmetic is identical
-    * to `langId`/`qualityScore`/`tokenCount` — but the composed
-    * single-expression form re-tokenizes the text ~9× and the
-    * blown-up projection falls out of whole-stage codegen (measured
-    * ~6× slower at sf0.1), so the composed corpus pipeline uses this
-    * staged form. */
+  /** Document scoring: (id, text, lang, quality, n_tokens). Each score
+    * is its own native `TextScore` instance that tokenizes the text in
+    * one pass, so the plan is one codegen'd projection, and a filter on
+    * `lang` that Catalyst pushes below it evaluates only the language
+    * ID; unselected scores are pruned and never run. */
   def scoreDocuments(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val text = col(textCol)
-    val staged = df.select(col(idCol), text,
-      split(trim(text), "\\s+").as("__tk"),
-      tokensLower(text).as("__tkl"))
-    val n = size(col("__tk")).cast("double")
-    val empty = trim(text) === ""
-    def ratio(lang: String): Column = {
-      val words = stopwords(lang)
-      when(empty, lit(0.0)).otherwise(
-        size(F.filter(col("__tkl"), t => t.isin(words: _*))) / n)
-    }
-    val scores = stopwords.keys.toSeq.sorted.map(l =>
-      struct(ratio(l).as("s"), lit(l).as("l")))
-    val best = array_max(array(scores: _*))
-    val lang = when(best.getField("s") > 0, best.getField("l"))
-      .otherwise("und")
-    val lenScore = least(length(text).cast("double") / 500.0, lit(1.0))
-    val stopScore = least(ratio("en") * 4.0, lit(1.0))
-    val alphaScore = when(empty, lit(0.0)).otherwise(
-      size(F.filter(col("__tk"), t => t.rlike("^[A-Za-z]+$"))) / n)
-    val punctPenalty = greatest(lit(1.0) - punctRatio(text) * 5.0, lit(0.0))
-    val quality = round(
-      (lenScore + stopScore + alphaScore + punctPenalty) / 4.0, 4)
-    staged.select(col(idCol), text,
-      lang.as("lang"), quality.as("quality"),
-      when(empty, 0L).otherwise(size(col("__tk")).cast("long"))
-        .as("n_tokens"))
+    df.select(col(idCol), text, langId(text).as("lang"),
+      qualityScore(text).as("quality"), tokenCount(text).as("n_tokens"))
   }
 
   // PII patterns kept to the regex subset RE2 (DuckDB) and

@@ -136,6 +136,63 @@ class DedupSpec extends SparkSpec {
     assert(ab > 0.4 && ab < 1.0)
   }
 
+  /** The language gate, LSH and connected components composed as the
+    * corpus_dedup benchmark composes them, over a Parquet corpus:
+    * (verified pairs, vertex -> cluster label). */
+  private def gatedDedup(texts: Seq[(Long, String)]): (Set[(Long, Long)], Map[Long, Long]) = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("gated_dedup").toFile
+    val path = new java.io.File(dir, "corpus.parquet").getPath
+    try {
+      val schema = StructType(Seq(StructField("id", LongType),
+        StructField("text", StringType)))
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        texts.map { case (i, t) => org.apache.spark.sql.Row(i, t) }, 2), schema)
+        .write.parquet(path)
+      val kept = TextAnalysis.scoreDocuments(
+        spark.read.schema(schema).parquet(path), "id", "text")
+        .filter(col("lang") === "en").select("id", "text")
+      val pairs = Dedup.minhashLsh(kept, "id", "text", k = 5, tau = 0.8)
+        .select("id_a", "id_b").persist()
+      try {
+        val cc = Dedup.connectedComponents(kept.select("id"),
+          pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+        (pairs.as[(Long, Long)].collect().toSet,
+          cc.as[(Long, Long)].collect().toMap)
+      } finally pairs.unpersist()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  private val enDoc = "the quick brown fox jumps over the lazy dog and " +
+    "then the cat is seen in the garden for a while"
+
+  test("gated dedup: an empty corpus yields no pairs and no labels") {
+    assert(gatedDedup(Seq.empty) == ((Set.empty, Map.empty)))
+  }
+
+  test("gated dedup: a corpus the gate empties yields no pairs and no labels") {
+    val de = (1L to 4L).map(i =>
+      (i, s"der hund und die katze ist nicht da mit dem ball $i"))
+    assert(gatedDedup(de) == ((Set.empty, Map.empty)))
+  }
+
+  test("gated dedup: one document is its own component") {
+    assert(gatedDedup(Seq((7L, enDoc))) == ((Set.empty, Map(7L -> 7L))))
+  }
+
+  test("gated dedup: five identical documents are 10 pairs, one component") {
+    val (pairs, labels) = gatedDedup((1L to 5L).map(i => (i, enDoc)))
+    assert(pairs == (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toSet)
+    assert(labels.keySet == (1L to 5L).toSet && labels.values.toSet.size == 1)
+  }
+
+  test("gated dedup: null text is gated out beside two identical documents") {
+    val (pairs, labels) =
+      gatedDedup(Seq((1L, null), (2L, enDoc), (3L, enDoc)))
+    assert(pairs == Set((2L, 3L)))
+    assert(labels.keySet == Set(2L, 3L) && labels(2L) == labels(3L))
+  }
+
   test("connected components: chains, cliques, isolated vertices") {
     // chain 1-2-3-4-5, clique 10-11-12, isolated 20; edge direction
     // must not matter (3->2 reversed inside the chain)
