@@ -77,8 +77,13 @@ object GraftExtensions {
 
   /** Install the planner strategies on an EXISTING session, which
     * was built without `spark.sql.extensions` (or `getOrCreate` ignored
-    * `withExtensions`). Idempotent: a strategy the session's planner
-    * already has, injected or installed, is not added again. */
+    * `withExtensions`), and enable Spark's `ReplaceHashWithSortAgg`:
+    * an aggregate whose input already arrives clustered and sorted on
+    * its grouping keys (a materialised import's rows) runs as one sort
+    * aggregate instead of hashing. The rule never adds a sort, so a
+    * plan whose input is not ordered is unchanged. Idempotent: a
+    * strategy the session's planner already has, injected or
+    * installed, is not added again. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.experimental.synchronized {
       val present = spark.sessionState.planner.strategies.map(_.getClass)
@@ -87,6 +92,8 @@ object GraftExtensions {
       if (missing.nonEmpty)
         spark.experimental.extraStrategies =
           spark.experimental.extraStrategies ++ missing
+      // Spark's switch for ReplaceHashWithSortAgg, off by default
+      spark.conf.set("spark.sql.execution.replaceHashWithSortAgg", "true")
     }
 
   /** Register into an EXISTING session (getOrCreate ignores

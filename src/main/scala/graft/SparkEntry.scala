@@ -5265,7 +5265,7 @@ object SparkEntry {
       """SELECT * FROM (VALUES
            ('man', 'oph_list: supported operator'),
            ('man_missing', 'no manual entry for ''oph_nope'''),
-           ('operators', 'oph_aggregate|oph_aggregate2|oph_apply|oph_b2drop|oph_cancel|oph_cluster|oph_concatnc|oph_concatnc2|oph_createcontainer|oph_cubeelements|oph_cubeio|oph_cubeschema|oph_cubesize|oph_delete|oph_deletecontainer|oph_drilldown|oph_duplicate|oph_else|oph_elseif|oph_endfor|oph_endif|oph_explorecube|oph_explorenc|oph_exportcsv|oph_exportnc|oph_exportnc2|oph_find|oph_folder|oph_for|oph_fs|oph_get_config|oph_hierarchy|oph_if|oph_importcsv|oph_importnc|oph_importnc2|oph_importncs|oph_input|oph_inspectfrag|oph_instances|oph_intercube|oph_intercube2|oph_list|oph_log_info|oph_loggingbk|oph_man|oph_manage_session|oph_merge|oph_mergecubes|oph_mergecubes2|oph_metadata|oph_movecontainer|oph_operators_list|oph_permute|oph_primitives_list|oph_publish|oph_randcube|oph_randcube2|oph_reduce|oph_reduce2|oph_restorecontainer|oph_resume|oph_rollup|oph_script|oph_search|oph_service|oph_set|oph_showgrid|oph_split|oph_sql|oph_subset|oph_subset2|oph_tasks|oph_unpublish|oph_wait'),
+           ('operators', 'oph_aggregate|oph_aggregate2|oph_apply|oph_b2drop|oph_cancel|oph_cluster|oph_concatnc|oph_concatnc2|oph_createcontainer|oph_cubeelements|oph_cubeio|oph_cubeschema|oph_cubesize|oph_delete|oph_deletecontainer|oph_drilldown|oph_duplicate|oph_else|oph_elseif|oph_endfor|oph_endif|oph_explorecube|oph_explorenc|oph_exportcsv|oph_exportnc|oph_exportnc2|oph_find|oph_folder|oph_for|oph_fs|oph_get_config|oph_hierarchy|oph_if|oph_importcsv|oph_importnc|oph_importnc2|oph_importncs|oph_input|oph_inspectfrag|oph_instances|oph_intercube|oph_intercube2|oph_list|oph_log_info|oph_loggingbk|oph_man|oph_manage_session|oph_merge|oph_mergecubes|oph_mergecubes2|oph_metadata|oph_movecontainer|oph_operators_list|oph_permute|oph_permute2|oph_primitives_list|oph_publish|oph_randcube|oph_randcube2|oph_reduce|oph_reduce2|oph_restorecontainer|oph_resume|oph_rollup|oph_script|oph_search|oph_service|oph_set|oph_showgrid|oph_split|oph_sql|oph_subset|oph_subset2|oph_tasks|oph_unpublish|oph_wait'),
            ('primitives', 'oph_abs|oph_accumulate|oph_append|oph_arg_max|oph_arg_max_array|oph_arg_min|oph_arg_min_array|oph_avg|oph_boxplot|oph_cast|oph_concat|oph_convert_d|oph_count|oph_count_array|oph_cumsum|oph_cumulative|oph_deaccumulate|oph_div_array|oph_extend|oph_find|oph_get_subarray|oph_get_subarray2|oph_gsl_boxplot|oph_gsl_complex_get_abs|oph_gsl_complex_get_arg|oph_gsl_complex_get_imag|oph_gsl_complex_get_real|oph_gsl_dwt|oph_gsl_fft|oph_gsl_histogram|oph_gsl_ifft|oph_gsl_quantile|oph_gsl_sd|oph_gsl_sort|oph_gsl_stats|oph_head|oph_interlace|oph_log|oph_mask|oph_math|oph_max|oph_max_array|oph_min|oph_min_array|oph_moving_avg|oph_mul_array|oph_mul_scalar|oph_negate|oph_operator|oph_padding|oph_pow|oph_predicate|oph_quantile|oph_replace|oph_reverse|oph_rotate|oph_scalar2array|oph_shift|oph_sort|oph_sqrt|oph_std|oph_sub_array|oph_sum|oph_sum_array|oph_sum_scalar|oph_tail|oph_var|oph_vector'),
            ('hierarchy', 'second|minute|hour|day|week|month|quarter|year'),
            ('script', 'graft_admin_ok'),

@@ -301,22 +301,9 @@ object Similarity {
     def unpersist(): Unit = assigned.unpersist()
   }
 
-  /**
-   * Fit the IVF index: k-means over L2-NORMALIZED vectors (Euclidean
-   * k-means on the unit sphere is monotone with cosine, so the cells
-   * match the rerank metric; unnormalized vectors would split
-   * directions by magnitude and silently drop cosine-nearest neighbors
-   * from the probed cells). The assignment (id, vec, cell) persists for
-   * reuse across query batches.
-   */
   /** (id, vec, nvec) projection: vec as double array, nvec L2-
     * normalized (zero vectors pass through unnormalized). */
-  /** Profiling window into [[normalized]] (IvfProfile only). */
-  private[graft] def normalizedForProfile(emb: DataFrame,
-      idCol: String, vecCol: String): DataFrame =
-    normalized(emb, idCol, vecCol)
-
-  private def normalized(emb: DataFrame, idCol: String,
+  private[graft] def normalized(emb: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     // ONE fused codegen pass (NormalizeVec): the interpreted
     // aggregate+transform pair this replaces cost ~32 s per full
@@ -643,6 +630,14 @@ object Similarity {
     }
   }
 
+  /**
+   * Fit the IVF index: k-means over L2-NORMALIZED vectors (Euclidean
+   * k-means on the unit sphere is monotone with cosine, so the cells
+   * match the rerank metric; unnormalized vectors would split
+   * directions by magnitude and silently drop cosine-nearest neighbors
+   * from the probed cells). The assignment (id, vec, cell) persists for
+   * reuse across query batches.
+   */
   def buildIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
       nClusters: Int = 16): IvfIndex = {
     val feats = normalized(emb, idCol, vecCol)

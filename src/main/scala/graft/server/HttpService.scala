@@ -181,8 +181,8 @@ final class HttpService(
   private val lastUsed =
     scala.collection.concurrent.TrieMap[String, Long]()
 
-  /** Release a routed engine: drop its cube store (plans only: no store
-    * cube holds cached blocks) and forget the route. */
+  /** Release a routed engine: drop its cube store (with the rows its
+    * imported cubes own) and forget the route. */
   private def releaseEngine(code: String, eng: Engine): Unit = {
     sessionEngines.remove(code)
     lastUsed.remove(code)

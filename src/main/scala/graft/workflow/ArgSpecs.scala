@@ -205,6 +205,10 @@ object ArgSpecs {
     "oph_deletecontainer" -> Seq(enum("force", yesNo: _*),
       enum("delete_type", "logical", "physical")),
     "oph_restorecontainer" -> Seq.empty,
+    // `dest` is the engine's alias of `container_output`; one of the
+    // two is required, which the operator checks
+    "oph_movecontainer" -> Seq(mand("container"), a("container_output"),
+      a("dest"), a("cwd")),
     "oph_delete" -> Seq.empty,
     "oph_folder" -> Seq(enum("command", "cd", "mkdir", "rm", "mv", "ls"),
       a("path"), a("dest")),

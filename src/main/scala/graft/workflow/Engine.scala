@@ -1,7 +1,7 @@
 package graft.workflow
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.InternalRowBridge
 
@@ -108,7 +108,8 @@ object Engine {
     "oph_subset", "oph_subset2", "oph_reduce", "oph_reduce2",
     "oph_aggregate", "oph_aggregate2", "oph_apply", "oph_intercube",
     "oph_intercube2", "oph_mergecubes", "oph_mergecubes2", "oph_duplicate",
-    "oph_merge", "oph_split", "oph_permute", "oph_rollup", "oph_drilldown",
+    "oph_merge", "oph_split", "oph_permute", "oph_permute2", "oph_rollup",
+    "oph_drilldown",
     "oph_cubeschema", "oph_cubesize", "oph_cubeelements", "oph_cubeio",
     "oph_explorecube", "oph_explorenc", "oph_inspectfrag", "oph_metadata",
     "oph_showgrid", "oph_hierarchy", "oph_man", "oph_operators_list",
@@ -212,7 +213,7 @@ final class Engine(
 
   import Engine._
 
-  // the engine's planner strategies, on sessions built without
+  // the engine's planner pieces, on sessions built without
   // spark.sql.extensions (the server's and the benchmark's)
   graft.GraftExtensions.install(spark)
 
@@ -278,21 +279,28 @@ final class Engine(
     * leaves a window where the just-registered cube is the sole
     * unpinned resident and eviction pressure lands exactly on it (the
     * storm soak hit this: with every older cube pinned by live runs,
-    * the next register's eviction evicted the newborn). `hold` hands
-    * the run data the task persisted, which the run releases when it
-    * ends. runDataOperator runs synchronously on the task's thread,
-    * including massive/importncs recursion, so a ThreadLocal set
-    * around the call covers every register beneath it. */
+    * the next register's eviction evicted the newborn). `held` holds
+    * the data the task persisted, which the run releases when it ends
+    * unless a cube took it over (see `owned`). runDataOperator runs
+    * synchronously on the task's thread, including massive/importncs
+    * recursion, so a ThreadLocal set around the call covers every
+    * register beneath it. */
   private final class RunHooks(val pin: String => Unit,
-      val hold: DataFrame => Unit)
+      val held: java.util.Queue[DataFrame])
   private val runHooks = new ThreadLocal[RunHooks]()
 
-  /** Remove one cube from the store. Single exit point for oph_delete,
-    * on_exit actions and LRU eviction. No store cube is persisted (an
-    * import's materialised rows belong to its run, which releases
-    * them), so there are no blocks to release here. */
+  /** Source rows a store cube owns: an import that no task of its own
+    * run reads materialises them for later requests (see
+    * `materialise`), and `dropCube` releases them. */
+  private val owned = scala.collection.concurrent.TrieMap[String, DataFrame]()
+
+  /** Remove one cube from the store and release the rows it owns.
+    * Single exit point for oph_delete, on_exit actions, LRU eviction
+    * and `clearCubes`. Cubes derived from the released rows keep their
+    * lineage and recompute from the source. */
   def dropCube(pid: String): Boolean = {
     cubeAccess.remove(pid).foreach(t => accessOrder.remove(t))
+    owned.remove(pid).foreach(_.unpersist(blocking = false))
     cubes.remove(pid).isDefined
   }
 
@@ -818,7 +826,7 @@ final class Engine(
     // source rows this run's imports materialised: released by the
     // finally below, whatever way the run ends
     val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    val hooks = new RunHooks(pinForRun, held.add(_))
+    val hooks = new RunHooks(pinForRun, held)
 
     /** Execute tasks[from..until); returns a control signal:
       * 0 = normal, 1 = break (consumed by the nearest enclosing loop),
@@ -1545,22 +1553,33 @@ final class Engine(
   /** Persist the source rows an import's cube needs (`cols`),
     * hash-partitioned on its explicit dims, with one eager job on the
     * calling thread (the run's job group), and hand them to the run,
-    * which unpersists them when it ends. A marker column naming this
-    * import makes the persisted plan unique: Spark's CacheManager
+    * which unpersists them when it ends unless the cube takes them
+    * over. `sorted` also sorts them on the explicit dims within each
+    * partition: rows that arrive clustered and ordered on the grouping
+    * keys let every later build of the cube run as one sort aggregate
+    * with no exchange (the session enables Spark's
+    * `ReplaceHashWithSortAgg`, see `GraftExtensions.install`). The sort
+    * takes a sorter page per task while the rows are persisted, which a
+    * cube keeping its rows pays once and a run would pay on each
+    * import, so only the cube's lifetime sorts. A marker column naming
+    * this import makes the persisted plan unique: Spark's CacheManager
     * matches cached data by plan equality, so no other import (another
     * run's, or one after the file was rewritten) can read these rows,
     * and their release frees nothing else. `persist`, not a local
     * checkpoint: every derived cube keeps its lineage and recomputes
     * from the source after the release. */
   private def materialise(raw: DataFrame, exp: Seq[String],
-      cols: Seq[String], source: String, hooks: RunHooks): DataFrame = {
+      cols: Seq[String], source: String, sorted: Boolean,
+      hooks: RunHooks): DataFrame = {
     val picked = raw.select(cols.distinct.map(col): _*).withColumn(
       ImportMarker, lit(s"$source#${importSeq.incrementAndGet()}"))
+    val keys = exp.map(col)
+    val parted = if (exp.isEmpty) picked else picked.repartition(keys: _*)
     val rows =
-      (if (exp.isEmpty) picked else picked.repartition(exp.map(col): _*))
-        .persist()
+      (if (sorted && exp.nonEmpty) parted.sortWithinPartitions(keys: _*)
+       else parted).persist()
     // held before the job runs: a failed or cancelled job still releases
-    hooks.hold(rows)
+    hooks.held.add(rows)
     rows.count()
     rows
   }
@@ -1571,7 +1590,9 @@ final class Engine(
     * `run=no` returns the match list without executing
     * (engine.c:1058-1065). `readers` is how many task instances of the
     * calling run read the output cube: an import read by two or more
-    * materialises its source rows (see `materialise`). */
+    * materialises its source rows for the run, and an import read by
+    * none (later requests read it) materialises them for its cube (see
+    * `materialise`). */
   def runDataOperator(operator: String, args: Map[String, String],
       readers: Int = 1): TaskResult = {
     val op = operator.toLowerCase
@@ -1736,16 +1757,22 @@ final class Engine(
               }
             }
           }
-        // a cube that two or more task instances of this run read is
-        // built over its source rows read once, in this task
-        val rows = Option(runHooks.get()).filter(_ => readers > 1)
-          .fold(timeConverted)(h =>
-            materialise(timeConverted, exp, exp ++ imp :+ measure, path, h))
-        val built = CubeOps.buildN(rows, measure, exp, imp,
-          args.getOrElse("container", "container"), path)
         // subset at import (reference importnc subset_dims/subset_filter/
         // subset_type args): same semantics as a follow-up oph_subset,
-        // but the predicate prunes the very first scan
+        // but the predicate prunes the very first scan. A subset on an
+        // explicit dim keeps whole source rows, so it applies to them
+        // too and materialised rows hold only what the cube keeps
+        val kept = explicitSubset(timeConverted, exp, args)
+          .fold(timeConverted)(timeConverted.filter)
+        // a cube that two or more task instances of this run read is
+        // built over its source rows read once, in this task; a cube
+        // that none reads is kept, rows and all, for later requests
+        val hooks = Option(runHooks.get()).filter(_ => readers != 1)
+        val rows = hooks.fold(kept)(h =>
+          materialise(kept, exp, exp ++ imp :+ measure, path,
+            sorted = readers == 0, h))
+        val built = CubeOps.buildN(rows, measure, exp, imp,
+          args.getOrElse("container", "container"), path)
         val c0 =
           if (args.contains("subset_filter") || args.contains("subset_dims"))
             applySubset(built, args)
@@ -1775,6 +1802,11 @@ final class Engine(
           }
         val pid = register(c, args.getOrElse("container", "container"),
           args.getOrElse("cwd", "/"), sourceTask = Some(op))
+        // the cube takes its rows over from the run
+        if (readers == 0) hooks.foreach { h =>
+          h.held.remove(rows)
+          owned(pid) = rows
+        }
         // import the source's global attributes as cube metadata
         // (reference import_metadata, default yes) — the header-only
         // read costs KBs
@@ -2853,14 +2885,30 @@ final class Engine(
       else if (dims.isEmpty || c.desc.implicitDims.exists(_.name == dims))
         CubeOps.subsetImplicit(c, filter,
           c.desc.implicitDims.headOption.flatMap(_.size))
-      else if (subType == "coord") {
-        if (filter.contains(":")) {
-          val Array(lo, hi) = filter.split(":", 2)
-          CubeOps.subsetCoord(c, c.df(dims) >= lo && c.df(dims) <= hi)
-        } else CubeOps.subsetCoord(c, c.df(dims) === filter)
-      } else CubeOps.subsetIndex(c, dims, filter)
+      else CubeOps.subsetCoord(c, explicitPredicate(c.df(dims), filter, subType))
     }
   }
+
+  /** The row predicate of a subset on an explicit dimension: a range or
+    * value of the dimension (`coord`), or of its 1-based indices,
+    * which an explicit dimension's values are (`index`). */
+  private def explicitPredicate(dim: Column, filter: String,
+      subType: String): Column =
+    if (subType != "coord") Subset.parse(filter).toColumn(dim)
+    else if (filter.contains(":")) {
+      val Array(lo, hi) = filter.split(":", 2)
+      dim >= lo && dim <= hi
+    } else dim === filter
+
+  /** An import's subset as a predicate on its source rows, when it
+    * names one of the explicit dims `exp` (see `applySubset`). */
+  private def explicitSubset(raw: DataFrame, exp: Seq[String],
+      args: Map[String, String]): Option[Column] =
+    for {
+      filter <- args.get("subset_filter")
+      dim <- args.get("subset_dims").filter(exp.contains)
+    } yield explicitPredicate(raw(dim), filter,
+      args.getOrElse("subset_type", "index"))
 
   private def idOf(pid: String): Long = pid.split("/").last.toLong
 

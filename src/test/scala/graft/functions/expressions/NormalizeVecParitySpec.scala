@@ -31,7 +31,7 @@ class NormalizeVecParitySpec extends SparkSpec {
     def collect(frame: org.apache.spark.sql.DataFrame) =
       frame.select(col("id"), col("nvec")).as[(Long, Seq[java.lang.Double])]
         .collect().toMap
-    val nat = collect(Similarity.normalizedForProfile(df, "vec_id", "embedding"))
+    val nat = collect(Similarity.normalized(df, "vec_id", "embedding"))
     val hof = collect(Similarity.normalizedHof(df, "vec_id", "embedding"))
     assert(nat.keySet == hof.keySet)
     nat.keySet.toSeq.sorted.foreach { id =>

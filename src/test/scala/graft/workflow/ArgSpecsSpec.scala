@@ -99,4 +99,21 @@ class ArgSpecsSpec extends AnyFunSuite {
     ArgSpecs.validate("oph_reduce", Map("operation" -> "mean"),
       hasDeps = false)
   }
+
+  test("every listed operator has a descriptor, and every descriptor " +
+      "is listed") {
+    val listed = Engine.operatorList.toSet
+    val described = ArgSpecs.specs.keySet
+    assert((listed -- described).isEmpty, "listed without a descriptor")
+    assert((described -- listed).isEmpty, "described but not listed")
+  }
+
+  test("oph_movecontainer checks its arguments") {
+    ok("oph_movecontainer", "container" -> "a", "container_output" -> "b")
+    ok("oph_movecontainer", "container" -> "a", "dest" -> "b", "cwd" -> "/")
+    assert(err("oph_movecontainer", "container" -> "a",
+      "container_outptu" -> "b").contains("unknown argument 'container_outptu'"))
+    assert(err("oph_movecontainer", "dest" -> "b")
+      .contains("missing mandatory argument 'container'"))
+  }
 }

@@ -7,6 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec,
+  SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -71,6 +74,23 @@ object ExecutedPlans {
     here ++ (inner ++ p.children).flatMap(caches)
   }
 
+  /** Nodes of `p` and of the adaptive plans and query stages beneath
+    * it, not looking into cached relations. */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _ => Nil
+    }
+    p +: (inner ++ p.children).flatMap(nodes)
+  }
+
+  /** Rows held by each distinct cached relation the plans read. */
+  def cachedRows(plans: Seq[SparkPlan]): Seq[Long] =
+    plans.flatMap(nodes).collect { case m: InMemoryTableScanExec =>
+      m.relation.cacheBuilder
+    }.distinct.map(_.rowCountStats.value.longValue)
+
   /** How many times the sources were read: executions that scan a file
     * themselves, plus distinct cached relations built from a scan. */
   def sourceReads(plans: Seq[SparkPlan]): Int =
@@ -91,7 +111,9 @@ object ExecutedPlans {
  * every branch scans cached rows, and the answers equal single-reader
  * runs. Released data leaves nothing behind in Spark's cache; derived
  * cubes recompute from the source; a rewritten file is re-read; two
- * runs of one path never share rows.
+ * runs of one path never share rows. An import that no task of its own
+ * run reads keeps its rows for later requests until its cube is
+ * dropped, and each later build over them is one sort aggregate.
  */
 class MaterialiseOnceSpec extends SparkSpec {
   import ExecutedPlans._
@@ -118,10 +140,11 @@ class MaterialiseOnceSpec extends SparkSpec {
         ("m", Seq(0, 1), Array.tabulate(120)(j => (j / 3 + 1) * 10.0 + j % 3 + 1))))
   }
 
-  private def imp(src: String, container: String) =
+  /** `extra`: further import arguments, each `, "name=value"`. */
+  private def imp(src: String, container: String, extra: String = "") =
     s"""{"name": "imp", "operator": "oph_importnc",
          "arguments": ["src_path=$src", "measure=m", "exp_dim=k",
-           "imp_dim=i", "container=$container"]}"""
+           "imp_dim=i", "container=$container"$extra]}"""
   private val sub =
     """{"name": "sub", "operator": "oph_subset",
         "arguments": ["subset_dims=k", "subset_filter=@r"],
@@ -133,8 +156,9 @@ class MaterialiseOnceSpec extends SparkSpec {
 
   /** imp -> 4 parallel branches, each `branch` (tasks reading imp). */
   private def fan(src: String, container: String,
-      branch: Seq[String] = Seq(sub, peek)) = Workflow.parse(s"""{
-    "name": "fan", "tasks": [${imp(src, container)},
+      branch: Seq[String] = Seq(sub, peek), extra: String = "") =
+    Workflow.parse(s"""{
+    "name": "fan", "tasks": [${imp(src, container, extra)},
       {"name": "loop", "operator": "oph_for",
        "arguments": ["key=r", "values=${ranges.mkString("|")}", "parallel=yes"]},
       ${branch.mkString(",")},
@@ -310,6 +334,191 @@ class MaterialiseOnceSpec extends SparkSpec {
       // three jobs, as before imports could materialise
       assert(jobs.jobsIn(_.startsWith("mo6:")) == 3)
     }
+    released(before)
+  }
+
+  // ------------------------------------------- rows a store cube owns
+
+  private def importOnly(src: String, extra: String = "") =
+    Workflow.parse(s"""{"name": "only", "tasks": [${imp(src, "own", extra)}]}""")
+
+  /** A later request: subset the stored cube `pid`, then explore. */
+  private def later(pid: String, range: String) = Workflow.parse(s"""{
+    "name": "later", "tasks": [
+      {"name": "sub", "operator": "oph_subset",
+       "arguments": ["cube=$pid", "subset_dims=k", "subset_filter=$range"]},
+      $peek]}""")
+
+  private def explore(e: Engine, pid: String) =
+    e.runDataOperator("oph_explorecube",
+      Map("cube" -> pid, "limit_filter" -> "100", "level" -> "2"))
+
+  test("a cube imported in one request and read by 5 later requests " +
+      "scans its file once, with the answers of unmaterialised runs") {
+    val src = tmpDir("mo-own")
+    writeParquet(src, scale = 10)
+    spark.catalog.clearCache()
+    val before = persistedIds
+    val e = engine("mo7")
+    val reads = Seq("1:10", "11:20", "21:30", "31:40", "5:25")
+    val (pid, res, plans) = ExecutedPlans.around(spark) { l =>
+      val i = e.run(importOnly(src))
+      completed(i)
+      val pid = i("imp").cubePid.get
+      (pid, reads.map(rg => e.run(later(pid, rg))), l.all())
+    }
+    res.foreach(completed)
+    assert(sourceReads(plans) == 1,
+      s"source read ${sourceReads(plans)} times over ${plans.size} executions")
+    assert(plans.forall(scans(_, intoCache = false).isEmpty),
+      "an execution scanned the source file instead of the cube's rows")
+    reads.zip(res).zipWithIndex.foreach { case ((rg, r), j) =>
+      val single = engine(s"mo7s$j").run(linear(src, rg))
+      completed(single)
+      assert(answer(r("peek")) == answer(single("peek")), rg)
+    }
+    // the rows outlive the import's run; the cube releases them
+    assert((persistedIds -- before).size == 1)
+    e.clearCubes()
+    released(before)
+  }
+
+  test("the build over materialised rows is one sort aggregate, " +
+      "with no exchange") {
+    val src = tmpDir("mo-plan")
+    writeParquet(src, scale = 10)
+    spark.catalog.clearCache()
+    val e = engine("mo8")
+    val pid = e.run(importOnly(src))("imp").cubePid.get
+    val plans = ExecutedPlans.around(spark) { l =>
+      assert(explore(e, pid).grid.exists(_.values.size == 40))
+      l.all()
+    }
+    val reads = plans.filter(p => nodes(p).exists(_.isInstanceOf[InMemoryTableScanExec]))
+    assert(reads.size == 1, plans.mkString("\n"))
+    val shown = nodes(reads.head)
+    assert(shown.exists(_.isInstanceOf[SortAggregateExec]), reads.head)
+    assert(!shown.exists(p => p.isInstanceOf[Exchange] ||
+      p.isInstanceOf[BaseAggregateExec] && !p.isInstanceOf[SortAggregateExec]),
+      reads.head)
+    e.clearCubes()
+  }
+
+  test("oph_delete, LRU eviction, clearCubes and session removal " +
+      "each release the rows a cube owns") {
+    val src = tmpDir("mo-drop")
+    writeParquet(src, scale = 10)
+    spark.catalog.clearCache()
+    val before = persistedIds
+    def owning(e: Engine): String = {
+      val pid = e.run(importOnly(src))("imp").cubePid.get
+      assert((persistedIds -- before).size == 1, "the import kept no rows")
+      pid
+    }
+
+    val e = engine("mo9")
+    val del = owning(e)
+    completed(e.run(Workflow.parse(s"""{"name": "del", "tasks": [
+      {"name": "d", "operator": "oph_delete", "arguments": ["cube=$del"]}]}""")))
+    released(before)
+
+    owning(e)
+    e.clearCubes()
+    released(before)
+
+    // a two-cube store: a later run's two cubes evict the import's
+    val small = new Engine(spark, new Catalog("mo10"), maxCubes = 2)
+    val evicted = owning(small)
+    completed(small.run(linear(src, "1:10")))
+    assert(small.cube(evicted).isEmpty, "the import's cube was not evicted")
+    released(before)
+
+    val auth = new graft.server.AuthService
+    auth.addUser("graft", "secret")
+    val svc = new graft.server.HttpService(engine("mo11"), auth).start()
+    try {
+      val base = s"http://127.0.0.1:${svc.boundPort}/services"
+      val importReq = s"""{"name": "only", "sessionid": "mo12",
+        "exec_mode": "sync", "tasks": [${imp(src, "own")}]}"""
+      assert(post(s"$base/execute", importReq)._1 == 200)
+      assert((persistedIds -- before).size == 1, "the import kept no rows")
+      val remove = """{"name": "rm", "sessionid": "mo12", "exec_mode": "sync",
+        "tasks": [{"name": "t0", "operator": "oph_manage_session",
+          "arguments": ["action=disable", "session=mo12"]},
+          {"name": "t1", "operator": "oph_manage_session",
+          "arguments": ["action=remove", "session=mo12"],
+          "dependencies": [{"task": "t0"}]}]}"""
+      assert(post(s"$base/execute", remove)._1 == 200)
+      // the next route resolution releases the removed session's engine
+      assert(post(s"$base/resume?session=mo12&id=1", "")._1 == 404)
+      released(before)
+    } finally svc.stop()
+  }
+
+  private def post(url: String, body: String): (Int, String) = {
+    val c = new java.net.URL(url).openConnection()
+      .asInstanceOf[java.net.HttpURLConnection]
+    c.setRequestProperty("Authorization", "Basic " +
+      java.util.Base64.getEncoder.encodeToString("graft:secret".getBytes))
+    if (body.nonEmpty) {
+      c.setRequestMethod("POST")
+      c.setDoOutput(true)
+      val os = c.getOutputStream
+      try os.write(body.getBytes("UTF-8")) finally os.close()
+    }
+    val code = c.getResponseCode
+    val is = if (code < 400) c.getInputStream else c.getErrorStream
+    (code, if (is == null) "" else try new String(is.readAllBytes, "UTF-8")
+      finally is.close())
+  }
+
+  test("a derived cube still answers after its base is deleted") {
+    val src = tmpDir("mo-derived")
+    writeParquet(src, scale = 10)
+    spark.catalog.clearCache()
+    val before = persistedIds
+    val e = engine("mo13")
+    val pid = e.run(importOnly(src))("imp").cubePid.get
+    val derived = e.run(later(pid, "11:20"))
+    completed(derived)
+    val subPid = derived("sub").cubePid.get
+    val first = explore(e, subPid)
+    assert(e.dropCube(pid))
+    released(before)
+    assert(answer(explore(e, subPid)) == answer(first))
+    assert(answer(first) == answer(derived("peek")))
+    // recomputing from the source persisted nothing again
+    released(before)
+    e.clearCubes()
+  }
+
+  test("an import-time subset on an explicit dim persists only the rows " +
+      "it keeps, for both lifetimes") {
+    val src = tmpDir("mo-subset")
+    writeParquet(src, scale = 10)
+    spark.catalog.clearCache()
+    val before = persistedIds
+    val subsetArgs = ", \"subset_dims=k\", \"subset_filter=11:20\""
+    val e = engine("mo14")
+    // the cube's lifetime: 10 of 40 keys, 3 rows each
+    val (pid, ownPlans) = ExecutedPlans.around(spark) { l =>
+      val r = e.run(importOnly(src, subsetArgs))
+      completed(r)
+      (r("imp").cubePid.get, l.all())
+    }
+    assert(cachedRows(ownPlans) == Seq(30L))
+    val shown = explore(e, pid)
+    val single = engine("mo14s").run(linear(src, "11:20"))
+    assert(answer(shown) == answer(single("peek")))
+    e.clearCubes()
+    released(before)
+    // the run's lifetime: a fanned-out import with the same subset
+    val (fanned, runPlans) = ExecutedPlans.around(spark) { l =>
+      val r = e.run(fan(src, "fs", extra = subsetArgs)); (r, l.all())
+    }
+    completed(fanned)
+    assert(cachedRows(runPlans) == Seq(30L))
+    assert(answer(fanned("peek_2")) == answer(single("peek")))
     released(before)
   }
 }
